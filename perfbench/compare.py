@@ -98,9 +98,11 @@ def main(argv):
             note = "" if n >= 10 else f"  (only {n} pairs)"
             print(f"{w:16} {name:14} {fmt(pv):>28} {fmt(cv):>28} "
                   f"{wins:>3}/{n:<3}  {v}{note}")
-        busy = [sum(r["host"]["busy_at_start"] for r in side) for side in (pw, cw)]
-        print(f"{w:16} runs flagged busy at start: parent {busy[0]}/{len(pw)}, "
-              f"change {busy[1]}/{len(cw)}")
+        for flag, what in (("busy_at_start", "busy at start"),
+                           ("contended_run", "CPU steal > 5% during the run")):
+            n = [sum(r["host"][flag] for r in side) for side in (pw, cw)]
+            print(f"{w:16} runs flagged {what}: parent {n[0]}/{len(pw)}, "
+                  f"change {n[1]}/{len(cw)}")
     print("\nper-layer medians from traced runs (change - parent):")
     for w in workloads:
         pl = [r["layers"] for r in parent if r["workload"] == w and r["trace"]]
