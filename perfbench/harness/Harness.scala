@@ -36,7 +36,7 @@ import graft.operators.{DedupOps, GraphOps, VectorOps}
 object Harness {
 
   /** Spark local property carrying the benchmark span a job belongs to:
-    * set on the client thread before each builder call and action, so
+    * set on the client thread before each key's build call and action, so
     * every job that call submits (eager latches included) names it. */
   val SpanProp = "perfbench.span"
 
@@ -358,7 +358,7 @@ object Harness {
   // ----------------------------------------------------------------- dump
 
   /** Writes each key's result as parquet plus its digest and the tables
-    * its executed queries scan (eager latches inside the builder
+    * its executed queries scan (eager latches inside the build call
     * included), for the one-time oracle check in `establish.py`. */
   def dump(outDir: String, sf: String, keysArg: String): Unit = {
     val spark = session()

@@ -164,7 +164,7 @@ def layers_by_pass(record):
                 1 for k in kids[b["id"]] if k["kind"] == "job")
             m["operators.self_ms"] += self_ms(b, kids[b["id"]])
         for a in kind["action"]:
-            m["driver.action_self_ms"] += self_ms(a, kids[a["id"]])
+            m["action.self_ms"] += self_ms(a, kids[a["id"]])
         for c, name in CATALYST.items():
             m[name] += sum(s["end"] - s["start"] for s in kind[c])
         m["catalyst.executions"] = len({s["id"].split(".")[0] for s in mine

@@ -2,8 +2,8 @@
 
     python3 -m unittest discover -s perfbench/tests
 
-The last three tests run the benchmark at the small data scale
-(sf0.001), about a minute on four cores.
+The EndToEnd tests run the benchmark at the small data scale (sf0.001),
+about a minute and a half on four cores.
 """
 import glob
 import json
@@ -135,7 +135,7 @@ class EndToEnd(unittest.TestCase):
             kinds.add(holder["kind"])
             self.assertEqual(spans[holder["parent"]]["kind"], "key")
             self.assertGreaterEqual(j["start"], holder["start"] - 1.0)
-        # the refresh latches its PageRank rounds inside the builder call,
+        # the refresh latches its PageRank rounds inside the build call,
         # so some jobs belong to the build span and some to the action
         self.assertEqual(kinds, {"operators.build", "action"})
         self.assertEqual(self.records["1"]["layers"]["trace.orphan_jobs"], 0)
