@@ -3,16 +3,19 @@
 
     python3 perfbench/establish.py
 
-Run once from a full checkout when a workload's key list or data
-changes. For every workload key at every data scale it writes the
-program's result as parquet, compares it with the key's DuckDB oracle
-SQL (SparkEntry.oracleSql) using the compare rule of dev/differ.py,
-and records the result's digest in expected_digests.json. A key with
-no oracle is pinned to the digest it produced. It also records, per
-workload, the tables its keys scan with their rows and bytes.
+Run once from a full checkout when a workload's key list or the data
+changes. At every data scale it writes each workload key's result with
+graft.Verify, checks it against the key's DuckDB oracle SQL with
+dev/differ.py, and records in expected_digests.json the digest the
+harness computes for that key. A key that fails the oracle check gets
+no digest, so every run counts it as failed; a key with no oracle is
+pinned to the digest it produced. It also records, per workload, the
+tables its keys' oracle SQL reads, with their rows and bytes.
 """
 import json
 import os
+import re
+import shutil
 import subprocess
 import sys
 
@@ -27,66 +30,76 @@ import differ  # noqa: E402
 SCALES = ("sf0.01", "sf0.001")
 
 
-def dump(classes, scale, keys):
-    out = os.path.join(run.BUILD, "establish", scale)
-    os.makedirs(out, exist_ok=True)
-    cp = os.pathsep.join([os.path.join(classes, "bench"),
-                          os.path.join(classes, "main"),
-                          os.path.join(run.SPARK_JARS, "*")])
-    tmp = os.path.join(run.BUILD, "tmp")
-    os.makedirs(tmp, exist_ok=True)
+def verify(classes, data_dir, out, keys):
+    """graft.Verify's parquet dump of `keys`, then dev/differ.py's
+    verdict per key: {key: (passed, verdict)}."""
+    shutil.rmtree(out, ignore_errors=True)
     env = dict(os.environ)
     env.pop("SPARK_LOCAL_DIRS", None)
-    subprocess.run(["java"] + run.ADD_OPENS +
-                   run.JVM_OPTS + [f"-Djava.io.tmpdir={tmp}", "-cp", cp,
-                    "graft.perfbench.Harness", "dump", out,
-                    os.path.join(run.HERE, "data", scale), ",".join(keys)],
-                   check=True, cwd=tmp, env=env)
-    with open(os.path.join(out, "dump.json")) as f:
-        return out, json.load(f)
+    subprocess.run(run.java_cmd(classes, archive=None) +
+                   ["graft.Verify", data_dir, out, ",".join(keys)],
+                   check=True, cwd=os.path.join(run.BUILD, "tmp"), env=env)
+    r = subprocess.run([sys.executable, os.path.join(run.ROOT, "dev",
+                                                     "differ.py"),
+                        data_dir, out] + keys, capture_output=True, text=True)
+    verdicts = {}
+    for line in r.stdout.splitlines():
+        parts = line.split(None, 2)
+        if len(parts) == 3 and parts[0] in ("PASS", "FAIL"):
+            verdicts[parts[1]] = (parts[0] == "PASS", parts[2])
+    return verdicts
 
 
-def oracle_check(data_dir, out, row):
-    if row["error"] is not None:
-        return f"ERROR {row['error'][:200]}"
-    if row["oracle"] is None:
-        return "pinned: no oracle"
-    con = duckdb.connect()
-    for t in differ.TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"'{os.path.join(data_dir, t + '.parquet')}'")
-    files = sorted(os.path.join(out, row["key"], f)
-                   for f in os.listdir(os.path.join(out, row["key"]))
-                   if f.endswith(".parquet"))
-    spark_df = con.execute(f"SELECT * FROM read_parquet({files!r})").fetchdf()
-    duck_df = con.execute(row["oracle"]).fetchdf()
-    verdict = differ.compare(spark_df, duck_df)
-    return f"duckdb {duckdb.__version__}: {verdict}"
+def digests(classes, data_dir, keys):
+    """Each key's digest and row count from one harness run, or None
+    when the key threw or its digest differed between passes."""
+    raw = os.path.join(run.BUILD, "establish", "digests.raw.json")
+    run.run_jvm(classes, {"keys": keys, "passes": 2}, data_dir, 1, 0, False,
+                raw)
+    with open(raw) as f:
+        record = json.load(f)
+    seen = {}
+    for s in record["warm_pass"] + record["samples"]:
+        seen.setdefault(s["key"], set()).add((s["digest"], s["rows"]))
+    return {k: next(iter(v)) if len(v) == 1 and None not in next(iter(v))
+            else None for k, v in seen.items()}
+
+
+def oracle_tables(sql):
+    """The testdata tables an oracle query reads."""
+    named = re.findall(r"\b(?:from|join)\s+([a-z_]+)", sql.lower())
+    return sorted(set(named) & set(differ.TABLES))
 
 
 def main():
     wl = run.load_json("workloads.json")
     keys = sorted({k for w in wl["workloads"].values() for k in w["keys"]})
     classes = run.build()
-    expected, tables = {}, {}
+    expected, oracle = {}, {}
     for scale in SCALES:
         data_dir = os.path.join(run.HERE, "data", scale)
-        out, rows = dump(classes, scale, keys)
+        out = os.path.join(run.BUILD, "establish", scale)
+        verdicts = verify(classes, data_dir, out, keys)
+        with open(os.path.join(out, "oracle_sql.json")) as f:
+            oracle = json.load(f)
+        got = digests(classes, data_dir, keys)
         expected[scale] = {}
-        for row in rows:
-            check = oracle_check(data_dir, out, row)
-            ok = check == "pinned: no oracle" or check.endswith(": OK")
-            expected[scale][row["key"]] = {
-                "digest": row.get("digest") if ok else None,
-                "rows": row.get("rows"), "check": check}
-            tables[row["key"]] = row.get("tables", [])
-            print(f"{scale} {row['key']}: {check}")
+        for k in keys:
+            ok, verdict = verdicts.get(k, (False, "no output from Verify"))
+            check = f"duckdb {duckdb.__version__}: {verdict}"
+            dg = got.get(k)
+            expected[scale][k] = {"digest": dg[0] if ok and dg else None,
+                                  "rows": dg[1] if dg else None,
+                                  "check": check}
+            print(f"{scale} {k}: {check}"
+                  f"{'' if dg else ' (harness: error or unstable digest)'}")
     with open(os.path.join(run.HERE, "expected_digests.json"), "w") as f:
         json.dump(expected, f, indent=1, sort_keys=True)
         f.write("\n")
     data_dir = os.path.join(run.HERE, "data", wl["scale"])
-    for name, w in wl["workloads"].items():
-        ts = sorted({t for k in w["keys"] for t in tables[k]})
+    for w in wl["workloads"].values():
+        ts = sorted({t for k in w["keys"] for t in oracle_tables(
+            oracle.get(k, ""))})
         w["input"] = {t: {"rows": pq.ParquetFile(
             os.path.join(data_dir, t + ".parquet")).metadata.num_rows,
             "bytes": os.path.getsize(os.path.join(data_dir, t + ".parquet"))}

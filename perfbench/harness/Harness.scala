@@ -12,10 +12,11 @@ import scala.util.control.NonFatal
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 
 import graft.SparkEntry
 import graft.operators.{DedupOps, GraphOps, VectorOps}
@@ -26,8 +27,7 @@ import graft.operators.{DedupOps, GraphOps, VectorOps}
   * as JSON. All statistics are computed by `run.py` from that record.
   *
   * {{{
-  * Harness run  <out.json> <sfDir> <seed> <seconds> <trace 0|1> <key,key,...>
-  * Harness dump <outDir> <sfDir> <key,key,...>
+  * Harness run <out.json> <sfDir> <seed> <seconds> <passCount> <trace 0|1> <key,key,...>
   * }}}
   *
   * `run` prints `READY` on stdout once the session is built and the
@@ -40,15 +40,12 @@ object Harness {
     * every job that call submits (eager latches included) names it. */
   val SpanProp = "perfbench.span"
 
-  def main(args: Array[String]): Unit = args.headOption match {
-    case Some("run") if args.length == 7 =>
-      val Array(_, out, sf, seed, seconds, trace, keys) = args
-      run(out, sf, seed.toLong, seconds.toDouble, trace == "1",
+  def main(args: Array[String]): Unit = args match {
+    case Array("run", out, sf, seed, seconds, passCount, trace, keys) =>
+      run(out, sf, seed.toLong, seconds.toDouble, passCount.toInt, trace == "1",
         keys.split(",").toSeq)
-    case Some("dump") if args.length == 4 =>
-      dump(args(1), args(2), args(3))
     case _ =>
-      System.err.println("usage: Harness run|dump ... (see the scaladoc)")
+      System.err.println("usage: Harness run ... (see the scaladoc)")
       sys.exit(2)
   }
 
@@ -233,7 +230,7 @@ object Harness {
   }
 
   def run(out: String, sf: String, seed: Long,
-      seconds: Double, trace: Boolean, keys: Seq[String]): Unit = {
+      seconds: Double, passCount: Int, trace: Boolean, keys: Seq[String]): Unit = {
     val tStart = System.nanoTime()
     val spark = session()
     val sc = spark.sparkContext
@@ -252,19 +249,23 @@ object Harness {
       val t0 = System.nanoTime()
       var t1 = t0
       val build = child("operators.build")
+      var action: Span = null
+      var built = false
       sc.setLocalProperty(SpanProp, if (build == null) null else build.id)
       val result: Map[String, Any] = try {
         val df = fns(k)(spark, dir)
         t1 = System.nanoTime()
         close(build)
-        val action = child("action")
+        built = true
+        action = child("action")
         sc.setLocalProperty(SpanProp, if (action == null) null else action.id)
         val (rows, dg) = digest(df)
         close(action)
         Map("rows" -> rows, "digest" -> dg, "error" -> null)
       } catch {
         case NonFatal(e) =>
-          close(build)
+          // close only the span that was still open when the key threw
+          if (built) close(action) else { t1 = System.nanoTime(); close(build) }
           // a failure can leave a half-built memo behind; drop it so the
           // next key is timed against the state it would normally see
           clearState(spark)
@@ -297,14 +298,16 @@ object Harness {
     val t0 = System.nanoTime()
     val root = if (trace) spans.open("workload", "workload", null, -1) else null
     var p = 0
-    // At least two passes: the JIT is still compiling during the first
-    // one, and a run that sometimes stops after it reads bimodal. A traced
-    // run orders its passes untraced, traced, traced, untraced (repeating)
-    // so traced minus untraced pass time, the tracing overhead, is not
-    // confounded with that warm-up either.
-    val minPasses = if (trace) 4 else 2
+    // At least `passCount` passes, the workload's count, chosen so that a
+    // run of --seconds makes that many and no more: a run that sometimes
+    // makes one pass more reads bimodal. A traced run makes at least
+    // five: pass 0 untraced, then traced, untraced, untraced, traced
+    // (repeating). Traced minus untraced pass time, the tracing
+    // overhead, then compares passes balanced in time, and run.py
+    // leaves pass 0 out of it.
+    val minPasses = if (trace) passCount.max(5) else passCount
     while (p < minPasses || (System.nanoTime() - t0) / 1e9 < seconds) {
-      val traced = trace && (p % 4 == 1 || p % 4 == 2)
+      val traced = trace && p > 0 && Set(0, 3)((p - 1) % 4)
       if (traced) {
         sc.addSparkListener(sched)
         spark.listenerManager.register(phases)
@@ -351,86 +354,7 @@ object Harness {
           "name" -> s.name, "pass" -> s.pass, "start" -> s.start,
           "end" -> s.end, "attrs" -> s.attrs.asScala.toMap)
       })
-    Files.writeString(Paths.get(out), Json.write(record))
+    Files.writeString(Paths.get(out), Serialization.write(record)(DefaultFormats))
     spark.stop()
-  }
-
-  // ----------------------------------------------------------------- dump
-
-  /** Writes each key's result as parquet plus its digest and the tables
-    * its executed queries scan (eager latches inside the build call
-    * included), for the one-time oracle check in `establish.py`. */
-  def dump(outDir: String, sf: String, keysArg: String): Unit = {
-    val spark = session()
-    val keys = keysArg.split(",").toSeq
-    val oracle = SparkEntry.oracleSql
-    val scanned = new ConcurrentLinkedQueue[String]()
-    spark.listenerManager.register(new QueryExecutionListener {
-      private def record(qe: QueryExecution): Unit =
-        qe.analyzed.foreach {
-          case l: LogicalRelation => l.relation match {
-            case r: HadoopFsRelation => r.location.rootPaths
-              .foreach(p => scanned.add(p.getName.stripSuffix(".parquet")))
-            case _ => ()
-          }
-          case _ => ()
-        }
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        record(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        record(qe)
-    })
-    val rows = keys.map { k =>
-      clearState(spark)
-      scanned.clear()
-      try {
-        val df = SparkEntry.queries(k)(spark, sf)
-        df.write.mode("overwrite").parquet(s"$outDir/$k")
-        val (n, dg) = digest(df)
-        org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
-        Map("key" -> k, "rows" -> n, "digest" -> dg,
-          "tables" -> scanned.asScala.toSeq.distinct.sorted,
-          "oracle" -> oracle.get(k).orNull, "error" -> null)
-      } catch {
-        case NonFatal(e) =>
-          Map("key" -> k, "error" -> s"${e.getClass.getName}: ${e.getMessage}")
-      }
-    }
-    Files.writeString(Paths.get(s"$outDir/dump.json"), Json.write(rows))
-    spark.stop()
-  }
-}
-
-/** Minimal JSON writer for the run record (maps, sequences, strings,
-  * numbers, booleans, null). A non-finite double becomes null. */
-object Json {
-  def write(v: Any): String = { val b = new StringBuilder; put(b, v); b.toString }
-  private def put(b: StringBuilder, v: Any): Unit = v match {
-    case null => b ++= "null"
-    case s: String => quote(b, s)
-    case d: Double => b ++= (if (d.isNaN || d.isInfinite) "null" else d.toString)
-    case n @ (_: Int | _: Long | _: Boolean) => b ++= n.toString
-    case m: scala.collection.Map[_, _] =>
-      b += '{'
-      m.toSeq.zipWithIndex.foreach { case ((k, x), i) =>
-        if (i > 0) b += ','
-        quote(b, k.toString); b += ':'; put(b, x)
-      }
-      b += '}'
-    case s: Iterable[_] =>
-      b += '['
-      s.zipWithIndex.foreach { case (x, i) => if (i > 0) b += ','; put(b, x) }
-      b += ']'
-    case other => quote(b, other.toString)
-  }
-  private def quote(b: StringBuilder, s: String): Unit = {
-    b += '"'
-    s.foreach {
-      case '"' => b ++= "\\\""
-      case '\\' => b ++= "\\\\"
-      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
-      case c => b += c
-    }
-    b += '"'
   }
 }

@@ -58,8 +58,10 @@ ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
     "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
     "sun.security.action", "sun.util.calendar")]
 # a fixed heap keeps peak RSS from following G1's resize decisions;
-# no perf-data file, so the JVM writes nothing outside the checkout
-JVM_OPTS = ["-Xms2g", "-Xmx2g", "-XX:-UsePerfData"]
+# no perf-data file, so the JVM writes nothing outside the checkout.
+# C1 only: with C2 the JIT was still compiling (about 10 s of CPU per
+# 7 s pass) through every measured pass, and pass times kept falling.
+JVM_OPTS = ["-Xms2g", "-Xmx2g", "-XX:-UsePerfData", "-XX:TieredStopAtLevel=1"]
 JVM_TIMEOUT_S = 170
 
 
@@ -99,9 +101,16 @@ def _scalac(out, classpath, files):
         raise BenchError("compile failed:\n" + (r.stdout + r.stderr)[-4000:])
 
 
+def _all_keys():
+    return sorted({k for w in load_json("workloads.json")["workloads"].values()
+                   for k in w["keys"]})
+
+
 def build():
     """Compile src/main and the harness with the scalac that ships in the
-    Spark distribution; skipped when the source digest is unchanged."""
+    Spark distribution, pack them as jars, and make the class-data-sharing
+    archive; skipped when the source digest is unchanged. Returns the
+    directory holding main.jar, bench.jar and classes.jsa."""
     if not SPARK_JARS:
         raise BenchError("no Spark distribution found: set SPARK_HOME")
     prog, harness, res, resources = _sources()
@@ -110,6 +119,8 @@ def build():
         h.update(os.path.relpath(p, ROOT).encode())
         with open(p, "rb") as f:
             h.update(f.read())
+    # the workload keys decide what the class-data-sharing archive holds
+    h.update(" ".join(_all_keys()).encode())
     digest = h.hexdigest()
     classes = os.path.join(BUILD, "classes")
     stamp = os.path.join(BUILD, "build.stamp")
@@ -124,9 +135,41 @@ def build():
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         shutil.copyfile(p, dst)
     _scalac(bench_out, f"{main_out}{os.pathsep}{jars}", harness)
+    for name, d in (("main", main_out), ("bench", bench_out)):
+        subprocess.run(["jar", "cf", os.path.join(classes, f"{name}.jar"),
+                        "-C", d, "."], check=True)
+    _archive_classes(classes)
     with open(stamp, "w") as f:
         f.write(digest)
     return classes
+
+
+def _archive_classes(classes):
+    """Class-data-sharing archive of every class a run loads from the
+    jars (Spark's and the program's), dumped at the exit of one run of
+    all workload keys on the smallest data. Runs map it at start, which
+    takes class loading and verification, about 15 s of a cold run,
+    out of set-up."""
+    out = os.path.join(BUILD, "tmp", "archive-run.json")
+    run_jvm(classes, {"keys": _all_keys(), "passes": 1},
+            os.path.join(HERE, "data", "sf0.001"), 0, 0, False, out,
+            archive="dump")
+    os.remove(out)
+
+
+def java_cmd(classes, archive="use"):
+    """java with the run's options and class path; `archive` is "use"
+    (map the archive), "dump" (write it at exit) or None."""
+    tmp = os.path.join(BUILD, "tmp")
+    os.makedirs(tmp, exist_ok=True)
+    cp = os.pathsep.join([os.path.join(classes, "bench.jar"),
+                          os.path.join(classes, "main.jar"),
+                          os.path.join(SPARK_JARS, "*")])
+    jsa = os.path.join(classes, "classes.jsa")
+    flag = {"use": [f"-XX:SharedArchiveFile={jsa}"],
+            "dump": [f"-XX:ArchiveClassesAtExit={jsa}"], None: []}[archive]
+    return (["java"] + ADD_OPENS + JVM_OPTS + flag +
+            [f"-Djava.io.tmpdir={tmp}", "-cp", cp])
 
 
 # ------------------------------------------------------------------- host
@@ -185,17 +228,13 @@ def busy_reasons(start):
 
 # -------------------------------------------------------------------- run
 
-def run_jvm(classes, workload, sf_dir, seed, seconds, trace, out):
+def run_jvm(classes, workload, sf_dir, seed, seconds, trace, out,
+            archive="use"):
     tmp = os.path.join(BUILD, "tmp")
-    os.makedirs(tmp, exist_ok=True)
-    cp = os.pathsep.join([os.path.join(classes, "bench"),
-                          os.path.join(classes, "main"),
-                          os.path.join(SPARK_JARS, "*")])
-    cmd = (["java"] + ADD_OPENS +
-           JVM_OPTS + [f"-Djava.io.tmpdir={tmp}", "-cp", cp,
-            "graft.perfbench.Harness", "run", out, sf_dir,
-            str(seed), str(seconds), "1" if trace else "0",
-            ",".join(workload["keys"])])
+    cmd = java_cmd(classes, archive) + [
+        "graft.perfbench.Harness", "run", out, sf_dir, str(seed),
+        str(seconds), str(workload["passes"]), "1" if trace else "0",
+        ",".join(workload["keys"])]
     env = dict(os.environ)
     env.pop("SPARK_LOCAL_DIRS", None)  # keep Spark's scratch inside the checkout
     log_path = os.path.join(BUILD, "logs", f"jvm-{os.getpid()}.log")

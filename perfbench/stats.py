@@ -206,12 +206,14 @@ def layers_by_pass(record):
 
 def per_layer(record):
     """Median over traced passes of every per-layer metric, plus the
-    tracing overhead: traced minus untraced median pass time."""
+    tracing overhead: traced minus untraced median pass time, leaving
+    out pass 0, which runs before the traced/untraced cycle."""
     per = layers_by_pass(record)
     names = sorted({k for m in per.values() for k in m})
     res = {k: median([m.get(k, 0.0) for m in per.values()]) for k in names}
     traced = [p["wall_s"] for p in record["passes"] if p["traced"]]
-    plain = [p["wall_s"] for p in record["passes"] if not p["traced"]]
+    plain = [p["wall_s"] for p in record["passes"]
+             if not p["traced"] and p["pass"] > 0]
     res["trace.overhead_s"] = (median(traced) - median(plain)
                                if traced and plain else 0.0)
     labels = defaultdict(list)

@@ -77,6 +77,64 @@ class Verdict(unittest.TestCase):
                                          True)[0], "unchanged")
 
 
+def span(id_, parent, kind, start, end, pass_=-1, attrs=None):
+    return {"id": id_, "parent": parent, "kind": kind, "name": kind,
+            "pass": pass_, "start": start, "end": end, "attrs": attrs or {}}
+
+
+class FailedAction(unittest.TestCase):
+    """A traced pass in which the second key's action threw: the harness
+    closes the action span at the throw and records the error."""
+
+    def record(self):
+        pass_ = {"traced": True, "wall_s": 0.1, "storage_mem_mb_pass_end": 0.0,
+                 "storage_rdds_after_clear": 0, "jvm_gc_ms": 0,
+                 "heap_peak_mb": 100.0}
+        sample = {"pass": 1, "memo_builds": 0, "memo_build_s": {}}
+        return {"nproc": 4, "passes": [
+            dict(pass_, **{"pass": 0, "traced": False}), dict(pass_, **{"pass": 1}),
+            dict(pass_, **{"pass": 2, "traced": False})],
+            "samples": [dict(sample, key="ok", rows=5, digest="d", error=None),
+                        dict(sample, key="bad", rows=0, digest=None,
+                             error="boom")],
+            "spans": [
+                span("h1", None, "workload", 0, 100),
+                span("h2", "h1", "pass", 0, 100, 1),
+                span("h3", "h2", "key", 0, 40, 1),
+                span("h4", "h3", "operators.build", 0, 10, 1),
+                span("h5", "h3", "action", 10, 40, 1),
+                span("j1", "h5", "job", 15, 35, attrs=None),
+                span("s1.0", "j1", "stage", 16, 34,
+                     attrs={"tasks": 4, "run_ms": 40}),
+                span("h6", "h2", "key", 40, 90, 1),
+                span("h7", "h6", "operators.build", 40, 50, 1),
+                span("h8", "h6", "action", 50, 60, 1),
+                span("j2", "h8", "job", 52, 58),
+                span("q1.analysis", None, "catalyst.analysis", 51, 52),
+            ]}
+
+    def test_per_layer_counts_the_failed_key(self):
+        m = stats.per_layer(self.record())
+        self.assertEqual(m["scheduler.jobs"], 2)
+        self.assertEqual(m["operators.build_ms"], 20)
+        # action self time: 30 - 20 (job 1) + 10 - 6 (job 2) - 1 (analysis)
+        self.assertAlmostEqual(m["action.self_ms"], 13.0)
+        self.assertEqual(m["scheduler.tasks"], 4)
+        self.assertEqual(m["trace.orphan_jobs"], 0)
+
+    def test_tracing_overhead_leaves_out_pass_0(self):
+        rec = self.record()
+        for p, wall in zip(rec["passes"], (9.0, 1.25, 1.0)):
+            p["wall_s"] = wall
+        self.assertAlmostEqual(stats.per_layer(rec)["trace.overhead_s"], 0.25)
+
+    def test_failed_key_is_counted_in_failed_ops(self):
+        c = stats.check_outputs(self.record()["samples"],
+                                {"ok": {"digest": "d"}, "bad": {"digest": "e"}})
+        self.assertEqual((c["attempted"], c["failed"]), (2, 1))
+        self.assertEqual(c["failures"][0]["key"], "bad")
+
+
 def run_bench(*args, cwd=ROOT):
     return subprocess.run([sys.executable, os.path.join(cwd, "perfbench",
                                                         "run.py"), *args],
