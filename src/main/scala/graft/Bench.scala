@@ -36,9 +36,7 @@ object Bench {
     * relation another one materialized */
   private def clearSessionState(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    graft.operators.GraphOps.clearMemos(spark)
-    graft.operators.DedupOps.clearMemos(spark)
-    graft.operators.VectorOps.clearMemos(spark)
+    SessionMemo.clear(spark)
   }
 
   def main(args: Array[String]): Unit = {
@@ -107,7 +105,7 @@ object Bench {
     // those memoized-but-uncached — recomputing on every action).
     clearSessionState(spark)
     // warmup builds must not leak into the timed memo_build record
-    graft.operators.GraphOps.drainMemoBuildTimes()
+    SessionMemo.drainBuildTimes()
     System.gc()
     // min-of-N timing (VERDICT r3 #1): the r3 driver bench lost the 2×
     // gate to a transient load spike that inflated one contiguous
@@ -161,7 +159,7 @@ object Bench {
       System.gc()
       sorted.foreach { case (name, fn) =>
         if (!failedQ.contains(name)) {
-          val builds0 = graft.operators.GraphOps.memoBuilds.get()
+          val builds0 = SessionMemo.builds.get()
           drain()
           telemetry.peakMem.set(0L)
           val snap0 = telemetry.snapshot
@@ -178,7 +176,7 @@ object Bench {
             }
             passTimes.getOrElseUpdate(name,
               scala.collection.mutable.ArrayBuffer.empty) += t
-            if (graft.operators.GraphOps.memoBuilds.get() > builds0)
+            if (SessionMemo.builds.get() > builds0)
               memoWarm += name
           } catch {
             // a failed query reports -1, not its time-to-exception — a
@@ -199,7 +197,7 @@ object Bench {
               // same pass would time against a cache they didn't build
               // and never get the memo_warm flag. Drop all session
               // state; the next consumer rebuilds and (via the
-              // memoBuilds delta) carries the flag honestly.
+              // SessionMemo.builds delta) carries the flag honestly.
               clearSessionState(spark)
           }
         }
@@ -264,7 +262,7 @@ object Bench {
     // instead of reading a memo move as query drift. Lazy builds record
     // ~0 by construction — their cost rides the first action, which
     // memo_warm already marks.
-    val memoBuildJson = graft.operators.GraphOps.drainMemoBuildTimes()
+    val memoBuildJson = SessionMemo.drainBuildTimes()
       .toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmt3(v) }
       .mkString("{", ",", "}")

@@ -182,7 +182,7 @@ object SparkDialectOverrides {
         |  SELECT doc_id,
         |    array_sort(array_distinct(
         |      transform(sequence(1, (size(hs) - 2) - 1), j -> array_min(slice(hs, j, (j + 3) - (j) + 1))))) AS fps
-        |  FROM h),""".stripMargin ->
+        |  FROM h)""".stripMargin ->
       s"""f AS (
         |  SELECT doc_id,
         |    element_at(transform(array(t), tt ->
@@ -191,7 +191,7 @@ object SparkDialectOverrides {
         |           AS BIGINT))),
         |        hs -> array_sort(array_distinct(
         |          transform(sequence(1, (size(hs) - 2) - 1), j -> array_min(slice(hs, j, (j + 3) - (j) + 1)))))), 1)), 1) AS fps
-        |  FROM base),""".stripMargin))
+        |  FROM base)""".stripMargin))
 
   /** The three Lloyd rounds share one zipped-generator shape over
     * assignment CTEs a1/a2/a3. */

@@ -135,14 +135,17 @@ case class SortedIntersect(left: Expression, right: Expression)
   override def elementSchema: StructType =
     StructType(Seq(StructField("w", LongType, nullable = false)))
 
+  // containsNull = false only: the merge scan reads primitive longs and
+  // would turn a null slot into a 0 witness
   override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
+      case ArrayType(LongType, false) => true
       case _ => false
     })
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<bigint> arguments, got " +
+      s"$prettyName expects two array<bigint> arguments without null " +
+        s"elements, got " +
         s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
   }
 

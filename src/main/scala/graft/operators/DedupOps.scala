@@ -206,20 +206,14 @@ object DedupOps {
     * inherit a wasted sort). Memoized per (session, dir): the CC loop
     * runs eagerly at construction, so without the memo each consuming
     * query would re-run the whole pair-generation + propagation. */
-  private val canonCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val canonMemo = SessionMemo[DataFrame]("dedupCanon")
 
   /** the embedding-cluster signature table (vec_id, sig) — memoized
-    * per (session, dir) like [[canonCache]] so repeated invocations in
+    * per (session, dir) like [[canonMemo]] so repeated invocations in
     * one session reuse the latched relation AND its checkpoint blocks
-    * release deterministically through [[clearMemos]] (r8 ADVICE: a
-    * per-call latch leaked blocks to ContextCleaner GC) */
-  private val embSigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  // memo_build attribution labels (VERDICT r10 #7)
-  GraphOps.registerMemo(canonCache, "dedupCanon")
-  GraphOps.registerMemo(embSigCache, "embSig")
+    * release deterministically through [[SessionMemo.clear]] (r8
+    * ADVICE: a per-call latch leaked blocks to ContextCleaner GC) */
+  private val embSigMemo = SessionMemo[DataFrame]("embSig")
 
   /** the banded view of [[embSignatures]]: one (vec_id, band, bh) row
     * per vector per band — shared by dedup_embedding_cluster (its
@@ -253,7 +247,7 @@ object DedupOps {
       .head().getLong(0)
 
   private def embSignatures(s: SparkSession, d: String): DataFrame =
-    GraphOps.memo(embSigCache, (s, d)) {
+    embSigMemo(s, d) {
       // one row per corpus vector — the standard "signature table"
       // step of any LSH pipeline, bounded at any scale. Materialized
       // before the banded self-join: both join sides would otherwise
@@ -266,16 +260,11 @@ object DedupOps {
       else sigRaw.localCheckpoint(true)
     }
 
-  /** see GraphOps.clearMemos — Bench drops all session memos after
-    * its warmup pass (and between timed reps); eviction unpersists */
-  private[graft] def clearMemos(s: SparkSession): Unit = {
-    GraphOps.evict(canonCache, s)
-    GraphOps.evict(embSigCache, s)
-    GraphOps.evict(evalPoolCache, s)
-  }
+  /** only the benchmark harness calls this; see [[SessionMemo.clear]] */
+  private[graft] def clearMemos(s: SparkSession): Unit = SessionMemo.clear(s)
 
   private def clusterCanonical(s: SparkSession, d: String): DataFrame =
-    GraphOps.memo(canonCache, (s, d)) {
+    canonMemo(s, d) {
       val pairs = jaccardPairs(shingleSets(s, d, cap = 200L), 0.3)
         .select(col("a").as("src"), col("b").as("dst"))
       val docs = Tables.documents(s, d).filter(col("doc_id") < 200L)
@@ -1230,17 +1219,15 @@ object DedupOps {
     * ([[graft.streaming.StreamPort.decontaminateSink]]). ~1/mod of the
     * corpus pays the chain (the doc_id filter pushes through the
     * aggregate barrier); broadcast-sized by the eval-set contract.
-    * Memoized + LATCHED per (session, dir) as of r10 (the embSigCache
+    * Memoized + LATCHED per (session, dir) as of r10 (the embSigMemo
     * discipline): the pool-cap guard COUNTS it and the screen then
     * BROADCASTS it — without the latch each would re-run the eval-side
     * winnow chain (measured: the guard added ~0.6 s at sf0.1 on the
     * unlatched pool; latched, the count reads the warm blocks). */
-  private val evalPoolCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  GraphOps.registerMemo(evalPoolCache, "evalPool") // memo_build label
+  private val evalPoolMemo = SessionMemo[DataFrame]("evalPool")
 
   def evalFpPool(s: SparkSession, d: String): DataFrame =
-    GraphOps.memo(evalPoolCache, (s, d)) {
+    evalPoolMemo(s, d) {
       val pool = TextOps.winnowFpArrays(s, d, DecontamK, DecontamW)
         .filter(col("doc_id") % DecontamEvalMod === 0L)
         .select(explode(col("fps")).as("fp")).distinct()

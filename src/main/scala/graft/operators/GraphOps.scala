@@ -38,129 +38,15 @@ object GraphOps {
     * (session, dir): every graph operator consumes the same edge
     * table, so it is derived once and reused (what a production
     * pipeline does with a materialized shared dimension). */
-  private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val edgeMemo = SessionMemo[DataFrame]("edges")
 
-  /** memoize per (session, dir), evicting entries whose session has
-    * stopped — without this the session-keyed maps would strongly
-    * retain DataFrames (and their plans) of dead sessions for the JVM
-    * lifetime. Shared with DedupOps' cluster-label memo. */
-  private[operators] def memo[V](
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V],
-      key: (SparkSession, String))(build: => V): V = {
-    cache.filterInPlace { case ((sess, _), v) =>
-      val keep = !sess.sparkContext.isStopped
-      if (!keep) unpersistQuietly(v) // blocks die with the session; belt
-      keep
-    }
-    cache.getOrElseUpdate(key, {
-      memoBuilds.incrementAndGet()
-      val t0 = System.nanoTime()
-      val v = build
-      // r11 (VERDICT r10 #7): log the time spent INSIDE the build
-      // closure per memo label. Eager builds (localCheckpoint, an
-      // internal count) — exactly the expensive ones — are captured
-      // fully; a lazy build records ~0 and its cost still rides the
-      // first consuming action, which memo_warm already marks.
-      val dt = (System.nanoTime() - t0) / 1e9
-      labelOf(cache).foreach { label =>
-        memoBuildTimes.compute(label,
-          (_, prev) => if (prev == null) dt else math.min(prev, dt))
-      }
-      v
-    })
-  }
-
-  /** label registry for [[memoBuildTimes]]. Looked up by REFERENCE
-    * (`eq`), never by `==`: the keys are mutable TrieMaps whose
-    * content-based equality would alias every empty cache to one
-    * entry. GraphOps' own caches live in a LAZY seq — several are
-    * declared far below this point, and an eager structure at init
-    * would capture nulls (the first memo() call happens at runtime,
-    * long after object init, so lazy is safe). Other modules register
-    * theirs at their declaration sites. */
-  private lazy val ownMemoLabels: Seq[(AnyRef, String)] = Seq(
-    edgeCache -> "edges", symCache -> "sym", wSymCache -> "wSym",
-    ssspCache -> "sssp", cappedCache -> "capped", coCiteCache -> "coCite",
-    coPartCache -> "coPart", lpaCache -> "lpa", walkCache -> "walk",
-    triRelCache -> "triRel", triAdjCache -> "triAdj",
-    seedDistCache -> "seedDist", seedPathCache -> "seedPath",
-    ccCache -> "cc", triCache -> "triCount", hbRegsCache -> "hbRegs")
-  private val registeredMemoLabels =
-    new java.util.concurrent.CopyOnWriteArrayList[(AnyRef, String)]
-  private[graft] def registerMemo(cache: AnyRef, name: String): Unit =
-    registeredMemoLabels.add(cache -> name)
-  private def labelOf(cache: AnyRef): Option[String] = {
-    val it = registeredMemoLabels.iterator()
-    while (it.hasNext) {
-      val (c, n) = it.next()
-      if (c eq cache) return Some(n)
-    }
-    ownMemoLabels.collectFirst { case (c, n) if c eq cache => n }
-  }
-
-  /** min observed build seconds per memo label since the last
-    * [[drainMemoBuildTimes]] — Bench emits this as the bench_queries
-    * "memo_build" map so round-over-round per-query comparison can
-    * subtract a memo move instead of reading it as query drift
-    * (VERDICT r10 #7). */
-  private val memoBuildTimes =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-  private[graft] def drainMemoBuildTimes(): Map[String, Double] = {
-    val out = scala.collection.mutable.Map.empty[String, Double]
-    val it = memoBuildTimes.entrySet().iterator()
-    while (it.hasNext) { val e = it.next(); out(e.getKey) = e.getValue }
-    memoBuildTimes.clear()
-    out.toMap
-  }
-
-  /** count of memo BUILDS since JVM start, across every module that
-    * funnels through [[memo]] (GraphOps, DedupOps, VectorOps) — Bench
-    * samples it around each timed query to mark the memo-warming
-    * consumers in bench_queries.json (ADVICE r5 #5: per-query times
-    * charge each shared relation's build to its alphabetically-first
-    * consumer, and round-over-round comparison needs to know WHICH
-    * rows carry that charge). */
-  private[graft] val memoBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** a memoized value may be a cache()'d DataFrame — release its
-    * storage when evicting so callers other than Bench (which
-    * clearCache()s anyway) don't leak cached blocks for the session
-    * lifetime (ADVICE r3). Quiet: unpersist on a dying session throws,
-    * and eviction must still complete. */
-  private def unpersistQuietly(v: Any): Unit = v match {
-    case ds: org.apache.spark.sql.Dataset[_] =>
-      try ds.unpersist()
-      catch { case scala.util.control.NonFatal(_) => () }
-    case seq: Seq[_] => seq.foreach(unpersistQuietly) // multi-round memos
-    case p: Product => p.productIterator.foreach(unpersistQuietly) // tupled memos
-    case _ => ()
-  }
-
-  /** evict every entry of `cache` owned by session `s`, unpersisting
-    * evicted DataFrames — shared by the per-module clearMemos */
-  private[operators] def evict[V](
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V],
-      s: SparkSession): Unit =
-    cache.filterInPlace { case ((sess, _), v) =>
-      val keep = sess != s
-      if (!keep) unpersistQuietly(v)
-      keep
-    }
-
-  /** drop every session-lifetime memo for `s` — Bench calls this after
-    * its warmup pass (and between timed reps) so that, even when the
-    * warmup dir EQUALS the timed dir, no timed query reads a
-    * pre-computed scalar or a memoized-but-uncached relation
-    * (clearCache() strips the cache markers; without this the memoized
-    * DataFrames would recompute uncached on every timed action) */
-  private[graft] def clearMemos(s: SparkSession): Unit = {
-    Seq(edgeCache, symCache, wSymCache, ssspCache, cappedCache, coCiteCache,
-      coPartCache, lpaCache, walkCache, triRelCache, triAdjCache,
-      seedDistCache, seedPathCache, ccCache).foreach(evict(_, s))
-    evict(triCache, s)
-    evict(hbRegsCache, s)
-  }
+  /** only the benchmark harness calls this; see [[SessionMemo.clear]] */
+  private[graft] def clearMemos(s: SparkSession): Unit = SessionMemo.clear(s)
+  /** only the benchmark harness calls this; see [[SessionMemo.builds]] */
+  private[graft] def memoBuilds = SessionMemo.builds
+  /** only the benchmark harness calls this; see [[SessionMemo.drainBuildTimes]] */
+  private[graft] def drainMemoBuildTimes(): Map[String, Double] =
+    SessionMemo.drainBuildTimes()
 
   /** supplier-vertex offset: must exceed the max customer key at ANY
     * scale factor. TPC-H custkey = 150k × SF, so even SF 100,000
@@ -182,10 +68,8 @@ object GraphOps {
     * runs once per (session, dir). Cache size is bounded by distinct
     * co-cited supplier PAIRS (≪ supplier², sparse in practice), not by
     * wedges — the aggregation collapses before caching. */
-  private val coCiteCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val cappedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val coCiteMemo = SessionMemo[DataFrame]("coCite")
+  private val cappedMemo = SessionMemo[DataFrame]("capped")
 
   /** per-source sorted neighbor sets, degree-capped — the shared root
     * of both co-citation derivations. The degree guard runs BEFORE the
@@ -198,7 +82,7 @@ object GraphOps {
     * hub is an executor OOM in exactly the query whose declared
     * semantics exist to exclude it. */
   private def cappedNbrSets(s: SparkSession, d: String): DataFrame =
-    memo(cappedCache, (s, d)) {
+    cappedMemo(s, d) {
       val e = edges(s, d)
       val ok = e.groupBy(col("src")).agg(count(lit(1)).as("cdeg"))
         .filter(col("cdeg") <= MaxCoCiteDegree).select(col("src"))
@@ -240,7 +124,7 @@ object GraphOps {
     * pair-neutral (a single-neighbor source explodes zero pairs) and
     * keeps the ln(1) = 0 division out of the ANSI long cast. */
   private def coCitePairs(s: SparkSession, d: String): DataFrame =
-    memo(coCiteCache, (s, d)) {
+    coCiteMemo(s, d) {
       graft.functions.SortedCombinations.register(s)
       cappedNbrSets(s, d)
         .filter(size(col("ds")) >= 2)
@@ -254,7 +138,7 @@ object GraphOps {
     }
 
   def edges(s: SparkSession, d: String): DataFrame =
-    memo(edgeCache, (s, d))(
+    edgeMemo(s, d)(
       // LAZY again (r8, VERDICT r7 #2): the r7 eager latch charged the
       // alphabetically-first consumer (graph_adamic_adar) a separate
       // materialization job before its own action — measured +1.1 s
@@ -278,11 +162,10 @@ object GraphOps {
     * per (session, dir). Deliberately cached for the session lifetime
     * (bounded: one small table per testdata dir), unlike per-call
     * iteration state which is unpersisted on exit. */
-  private val symCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val symMemo = SessionMemo[DataFrame]("sym")
 
   private def symEdges(s: SparkSession, d: String): DataFrame =
-    memo(symCache, (s, d)) {
+    symMemo(s, d) {
       val e = edges(s, d)
       // hash-partitioned on the iteration join key at materialization:
       // CC and PageRank join this every iteration, and a pre-partitioned
@@ -305,11 +188,10 @@ object GraphOps {
     * consume it every iteration. Derivation cost = the SAME
     * lineitem ⋈ orders scan as [[edges]] with a count aggregate in
     * place of the distinct — one shuffle, map-side combined. */
-  private val wSymCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val wSymMemo = SessionMemo[DataFrame]("wSym")
 
   private def wSymEdges(s: SparkSession, d: String): DataFrame =
-    memo(wSymCache, (s, d)) {
+    wSymMemo(s, d) {
       val pair = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
@@ -326,11 +208,10 @@ object GraphOps {
     * graph_sssp_seeds and graph_closeness_weighted consume it. The
     * loop latches per round (lineage truncation); the memo holds the
     * final latched relation. */
-  private val ssspCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val ssspMemo = SessionMemo[DataFrame]("sssp")
 
   private def ssspDist(s: SparkSession, d: String): DataFrame =
-    memo(ssspCache, (s, d)) {
+    ssspMemo(s, d) {
       // cost floor 1 (ADVICE r9): 1000000 DIV w floors to 0 past 1e6
       // distinct orders on one edge, and a zero-cost edge gives reached
       // vertices dd = 0 — conflated with the seed self-row by the
@@ -516,21 +397,6 @@ object GraphOps {
     // and the audits want the full lineage visible anyway
     if (planOnly(s)) df.cache() else df.localCheckpoint(true)
 
-  /** free the storage blocks behind a localCheckpoint'd Dataset (r15,
-    * ADVICE r14 #1): Dataset.unpersist is a no-op for checkpoint
-    * blocks — they belong to the internal RDD wrapped by the
-    * LogicalRDD leaf — so loop-scoped checkpoints (HITS's two
-    * pre-partitioned edge orientations) lingered until ContextCleaner
-    * GC. Only call this once every consumer of the frame has
-    * MATERIALIZED (checkpoint blocks cannot be recomputed); callers
-    * release loop-internal state after the loop's last eager step. */
-  private[operators] def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   private[operators] def stateCap(s: SparkSession): Long =
     s.conf.get(BroadcastStateMaxRowsKey, BroadcastStateMaxRows.toString).toLong
   private[operators] def edgeCap(s: SparkSession): Long =
@@ -541,11 +407,10 @@ object GraphOps {
     * Each step = ONE frontier×edges join (frontier is one row per
     * seed → broadcast-sized at any graph scale) + per-seed min_by on
     * the (h, dst) total order. */
-  private val walkCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val walkMemo = SessionMemo[DataFrame]("walk")
 
   private def walkSample(s: SparkSession, d: String): DataFrame =
-    memo(walkCache, (s, d))(walkDerive(s, d).localCheckpoint())
+    walkMemo(s, d)(walkDerive(s, d).localCheckpoint())
 
   private[graft] def walkDerive(s: SparkSession, d: String): DataFrame = {
     val sym = symEdges(s, d)
@@ -602,11 +467,10 @@ object GraphOps {
     * triangle census consumes it twice per computation (orientation +
     * closing) and the clustering coefficient adds a degree pass, so an
     * unmemoized derivation re-runs the co-order self-join each time */
-  private val coPartCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val coPartMemo = SessionMemo[DataFrame]("coPart")
 
   private def coParts(s: SparkSession, d: String): DataFrame =
-    memo(coPartCache, (s, d)) {
+    coPartMemo(s, d) {
       // group-and-explode derivation, not a self-join (r4, measured at
       // sf0.1: 2.9 s vs 6.0 s, identical 1.196 M rows): ONE map-side-
       // combined shuffle carries (order, part-set) rows, the a<b pairs
@@ -642,26 +506,24 @@ object GraphOps {
     * of the input dir, graph_triangles and the clustering coefficient
     * both need it, and re-running the O(m^1.5) wedge join to recompute
     * one long would double the bench's heaviest query for nothing */
-  private val triCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
+  private val triCountMemo = SessionMemo[Long]("triCount")
 
   private def triangleCount(s: SparkSession, d: String): Long =
-    memo(triCache, (s, d))(triangleCountUncached(s, d))
+    triCountMemo(s, d)(triangleCountUncached(s, d))
 
   /** 5-round LPA labels over the standard query graph, memoized per
     * (session, dir): the detection query and the modularity score both
     * consume the identical labeling (labelPropagation ends in an eager
     * localCheckpoint, so the memoized frame is already materialized —
     * no extra .cache() needed) */
-  private val lpaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val lpaMemo = SessionMemo[DataFrame]("lpa")
 
   /** LPA round count — shared by the engine loop and the unrolled
     * oracle SQL so the two can never drift apart */
   val LpaRounds = 5
 
   private def lpaLabels(s: SparkSession, d: String): DataFrame =
-    memo(lpaCache, (s, d))(
+    lpaMemo(s, d)(
       labelPropagation(symEdges(s, d), iters = LpaRounds, symmetrized = true,
         numParts = graphParts(s, d)))
 
@@ -678,11 +540,10 @@ object GraphOps {
     * 46.5 s). Since r8 the latch is a localCheckpoint, not
     * cache+count — see [[latch]]. Plan-only paths ([[PlanOnlyKey]])
     * stay action-free. */
-  private val seedDistCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val seedDistMemo = SessionMemo[DataFrame]("seedDist")
 
   private def seedDistances(s: SparkSession, d: String): DataFrame =
-    memo(seedDistCache, (s, d)) {
+    seedDistMemo(s, d) {
       val sym = symEdges(s, d)
       var dist = sym.select(col("src").as("v")).distinct()
         .filter(col("v") <= 10L)
@@ -706,8 +567,7 @@ object GraphOps {
     * construction since r7 (VERDICT r6 #1) in dependency order after
     * [[seedDistances]]; plan-only paths ([[PlanOnlyKey]]) stay
     * action-free. */
-  private val seedPathCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val seedPathMemo = SessionMemo[DataFrame]("seedPath")
 
   /** betweenness horizon: σ only needs the 2-hop shell — on the
     * BIPARTITE trade graph every seed–seed distance is EVEN, so a
@@ -731,7 +591,7 @@ object GraphOps {
   val BwPairs = 64
 
   private def seedPathCounts(s: SparkSession, d: String): DataFrame =
-    memo(seedPathCache, (s, d)) {
+    seedPathMemo(s, d) {
       val sym = symEdges(s, d)
       val sd = seedDistances(s, d)
       var sig = sd.filter(col("dist") === 0L)
@@ -866,8 +726,7 @@ object GraphOps {
       .agg(sum(expr("CAST(round(est, 4) AS DECIMAL(18,4))")))
       .head().getDecimal(0)
 
-  private val hbRegsCache = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), (Seq[DataFrame], Boolean)]
+  private val hbRegsMemo = SessionMemo[(Seq[DataFrame], Boolean)]("hbRegs")
 
   /** the per-round HyperBall register relations for h = 0..H plus the
     * saturation flag, memoized per (session, dir) — the effective
@@ -885,7 +744,7 @@ object GraphOps {
     * Plan-only paths (no actions allowed) get a fixed
     * [[HbPlanOnlyRounds]]-deep lazy plan. */
   private def hbRegRounds(s: SparkSession, d: String): (Seq[DataFrame], Boolean) =
-    memo(hbRegsCache, (s, d)) { // memo(): build counter + dead-session GC
+    hbRegsMemo(s, d) {
       val sym = symEdges(s, d)
       val hll = udaf(new graft.functions.HllAgg(HbM, HbSeedIdx))
       val regMerge = udaf(new graft.functions.HllMergeAgg(HbM))
@@ -924,11 +783,10 @@ object GraphOps {
     * graph_connected_components and graph_component_size_dist consume
     * the identical fixpoint (the loop ends in an eager
     * localCheckpoint, so the memoized frame is already materialized). */
-  private val ccCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val ccMemo = SessionMemo[DataFrame]("cc")
 
   private def ccLabels(s: SparkSession, d: String): DataFrame =
-    memo(ccCache, (s, d))(
+    ccMemo(s, d)(
       connectedComponents(symEdges(s, d), symmetrized = true,
         numParts = graphParts(s, d)))
 
@@ -977,15 +835,13 @@ object GraphOps {
     * items, and the full count materialized the pair pipeline as a
     * separate job). The internal adjacency cache (the one intermediate
     * orientedTriangles pins, n rows / Σ sizes = m ≈ 10 MB at sf0.1)
-    * is tracked in [[triAdjCache]] so clearMemos and session eviction
-    * release it. */
-  private val triRelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val triAdjCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * is tracked in [[triAdjMemo]] so SessionMemo.clear and session
+    * eviction release it. */
+  private val triRelMemo = SessionMemo[DataFrame]("triRel")
+  private val triAdjMemo = SessionMemo[DataFrame]("triAdj")
 
   private[graft] def triangleRel(s: SparkSession, d: String): DataFrame =
-    memo(triRelCache, (s, d)) {
+    triRelMemo(s, d) {
       val co = coParts(s, d)
       // Broadcast decision from a SAFE OVER-estimate, Σ_orders C(k,2)
       // over per-order distinct-part counts (r8, closing VERDICT r7 #2
@@ -1010,7 +866,7 @@ object GraphOps {
         twicePairs / 2 <= edgeCap(s)
       }
       val (tri0, adj) = orientedTriangles(co, bcast)
-      memo(triAdjCache, (s, d))(adj) // track the internal cache for eviction
+      triAdjMemo(s, d)(adj) // track the internal cache for eviction
       tri0.cache()
     }
 
@@ -1150,7 +1006,7 @@ object GraphOps {
         if (iter == 0) releaseAdj()
         // this round's tri is materialized (the count above consumed
         // it) — the previous round's checkpoint blocks can go
-        if (prevTri != null) { releaseLocalCheckpoint(prevTri); prevTri = null }
+        if (prevTri != null) { SessionMemo.releaseLocalCheckpoint(prevTri); prevTri = null }
         // fixpoint: nothing dropped, so e2's supports are the
         // in-truss supports of the surviving subgraph
         done = n2 == n
@@ -1172,8 +1028,8 @@ object GraphOps {
             "x3", "y3").localCheckpoint(false)
         }
       }
-      if (prevTri != null) releaseLocalCheckpoint(prevTri)
-      releaseLocalCheckpoint(tri)
+      if (prevTri != null) SessionMemo.releaseLocalCheckpoint(prevTri)
+      SessionMemo.releaseLocalCheckpoint(tri)
       if (!done) throw new IllegalStateException(
         s"kTruss did not converge in $maxIters rounds")
       oracleRounds.foreach(cap => if (iter > cap)
@@ -2430,8 +2286,8 @@ object GraphOps {
           // step ends in an EAGER localCheckpoint, and the final join
           // reads only h/a blocks) — free their checkpoint blocks now
           // instead of leaking them until ContextCleaner GC
-          releaseLocalCheckpoint(eBySrc)
-          releaseLocalCheckpoint(eByDst)
+          SessionMemo.releaseLocalCheckpoint(eBySrc)
+          SessionMemo.releaseLocalCheckpoint(eByDst)
         }
       } finally {
         conf.set("spark.sql.adaptive.enabled", aqeWas)
@@ -3513,6 +3369,7 @@ object GraphOps {
     // broadcast(pr) unconditionally, an OOM at cluster-scale vertex
     // counts
     val bcastState = pr.count() <= stateCap(spark) && parts > 8
+    var lastCp = pr // the latest materialized checkpoint
     // iterative-loop execution discipline: AQE off + shuffle width
     // pinned to parts (restored in the finally) — see connectedComponents
     val conf = spark.conf
@@ -3553,7 +3410,14 @@ object GraphOps {
             .select(col("v"), (lit(0.15) +
               lit(0.85) * coalesce(col("sc"), lit(0.0))).as("pr"))
         })
-        pr = if (i % 3 == 0 || i == iters) next.localCheckpoint() else next
+        if (i % 3 == 0 || i == iters) {
+          // the eager checkpoint has read the previous one, which no
+          // consumer references any more: free its blocks now
+          val cp = next.localCheckpoint()
+          SessionMemo.releaseLocalCheckpoint(lastCp)
+          lastCp = cp
+          pr = cp
+        } else pr = next
       }
     } finally {
       if (!symmetrized) sym.unpersist()

@@ -107,17 +107,14 @@ object PatentPipeline {
   }
 
   /** the parsed-and-merged weekly snapshot, memoized + cached per
-    * (session, dir) through the shared [[GraphOps.memo]] discipline
-    * (VERDICT r13 What's-wrong #2: the raw `.cache()` here was the one
-    * cached relation outside the memo/unpersist lifecycle — eviction
-    * now unpersists it when its session dies, like every graph memo).
-    * Consumed twice per refresh: edge build + the serving class join. */
-  private val mergedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  GraphOps.registerMemo(mergedCache, "patentMerged")
+    * (session, dir) as a [[SessionMemo]]: [[SessionMemo.clear]] and
+    * the dead-session sweep evict it and unpersist its blocks, like
+    * every other shared memo. Consumed twice per refresh: edge build +
+    * the serving class join. */
+  private val mergedMemo = SessionMemo[DataFrame]("patentMerged")
 
   private def mergedSnapshot(s: SparkSession, d: String): DataFrame =
-    GraphOps.memo(mergedCache, (s, d)) {
+    mergedMemo(s, d) {
       val rec = records(s, d)
       val cut = lit(RefreshCutoff).cast("timestamp")
       // ONE pass over the records (r14, guide §1.2 "don't compute

@@ -1056,16 +1056,10 @@ object VectorOps {
     * (cell, dim) hash agg — shuffle ∝ k·64, never ∝ corpus.
     * Memoized per (session, dir): two declared queries consume the
     * same training. */
-  private val codebookCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  GraphOps.registerMemo(codebookCache, "codebook") // memo_build label
+  private val codebookMemo = SessionMemo[DataFrame]("codebook")
 
-  /** see GraphOps.clearMemos — Bench drops all session memos after
-    * its warmup pass (and between timed reps); eviction unpersists */
-  private[graft] def clearMemos(s: SparkSession): Unit = {
-    GraphOps.evict(codebookCache, s)
-    GraphOps.evict(gramCache, s)
-  }
+  /** only the benchmark harness calls this; see [[SessionMemo.clear]] */
+  private[graft] def clearMemos(s: SparkSession): Unit = SessionMemo.clear(s)
 
   /** Lloyd round count and training-sample size factor — shared by the
     * engine loop and the unrolled oracle SQL so they cannot drift */
@@ -1090,7 +1084,7 @@ object VectorOps {
     }.mkString("(", " + ", ")")
 
   private def trainedCodebook(s: SparkSession, d: String): DataFrame =
-    GraphOps.memo(codebookCache, (s, d)) {
+    codebookMemo(s, d) {
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val k = math.ceil(math.sqrt(  // footer-metadata N: action-free (ADVICE r4)
         GraphOps.tableRows(s, d, "embeddings").toDouble)).toInt
@@ -1295,9 +1289,7 @@ object VectorOps {
   /** memo for the exact integer Gram matrix (i, j, gi): gi = Σ_rows
     * xi·xj in 1e-16 units, both indexes 1-based — two declared
     * queries consume the same matrix */
-  private val gramCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  GraphOps.registerMemo(gramCache, "gram") // memo_build label
+  private val gramMemo = SessionMemo[DataFrame]("gram")
 
   /** Why mapPartitions (policy exception (d), like the multimodal
     * decoders): the Gram is a per-partition ACCUMULATION — O(d²)
@@ -1314,7 +1306,7 @@ object VectorOps {
     * (quot, rem) 1e18-limb longs rebuilt into DECIMAL(38,0) — no
     * precision cliff at any corpus size. */
   private def gramInt(s: SparkSession, d: String): DataFrame =
-    GraphOps.memo(gramCache, (s, d)) {
+    gramMemo(s, d) {
       import s.implicits._
       val limb = java.math.BigInteger.valueOf(1000000000000000000L)
       val partials = Tables.embeddings(s, d)

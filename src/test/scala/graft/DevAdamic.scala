@@ -19,12 +19,12 @@ object DevAdamic {
       println(f"$name%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
     }
     for (rep <- 1 to 2) {
-      operators.GraphOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       time(s"common_neighbors rep$rep") {
         operators.GraphOps.queries("graph_common_neighbors")(spark, sfDir).collect()
       }
-      operators.GraphOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       time(s"adamic_adar rep$rep") {
         operators.GraphOps.queries("graph_adamic_adar")(spark, sfDir).collect()

@@ -27,7 +27,7 @@ object DevAdamic2 {
     qs.foreach(q => operators.GraphOps.queries(q)(spark, "/root/testdata/sf0.001").count())
     for (mode <- Seq("2000000", "0"); rep <- 1 to 3) {
       spark.conf.set(operators.GraphOps.BroadcastEdgeMaxRowsKey, mode)
-      operators.GraphOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       System.gc()
       qs.foreach { q =>

@@ -47,9 +47,9 @@ object DevAdamic3 {
     }
     // warm codegen
     operators.GraphOps.queries("graph_adamic_adar")(spark, warmDir).count()
-    if (warmDir != sfDir) operators.GraphOps.clearMemos(spark)
+    if (warmDir != sfDir) SessionMemo.clear(spark)
     for (rep <- 1 to 3) {
-      operators.GraphOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       System.gc()
       time(s"rep$rep edges.count (memo build)") {
@@ -67,7 +67,7 @@ object DevAdamic3 {
     }
     // cold chain, as the bench charges it
     for (rep <- 1 to 3) {
-      operators.GraphOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       System.gc()
       time(s"rep$rep adamic COLD chain") {

@@ -23,7 +23,7 @@ object DevBetween5 {
     }
     // warm JVM/codegen at sf0.001 like the bench does
     SparkEntry.queries("graph_betweenness_seeds")(spark, "/root/testdata/sf0.001").count()
-    operators.GraphOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     spark.catalog.clearCache()
     def callPriv(name: String): org.apache.spark.sql.DataFrame = {
       val m = operators.GraphOps.getClass.getDeclaredMethods

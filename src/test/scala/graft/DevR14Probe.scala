@@ -65,9 +65,7 @@ object DevR14Probe {
       org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
     def clear(): Unit = {
       spark.catalog.clearCache()
-      operators.GraphOps.clearMemos(spark)
-      operators.DedupOps.clearMemos(spark)
-      operators.VectorOps.clearMemos(spark)
+      SessionMemo.clear(spark)
     }
     def time(label: String, loud: Boolean = false)(f: => Unit): Double = {
       drain(); jobs.set(0); stages.set(0); taskTotal.set(0)

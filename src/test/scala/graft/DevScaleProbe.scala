@@ -79,14 +79,14 @@ object DevScaleProbe {
       .queries("graph_edges")(spark, probeDir).count()
     println(s"probe edges: $dims")
     for (rep <- 1 to 2) {
-      operators.GraphOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       System.gc()
       heads.foreach { q =>
         val t1 = time(q, "/root/testdata/sf0.1")
         println(f"rep$rep $q%-34s sf0.1 $t1%7.2f s")
       }
-      operators.GraphOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       System.gc()
       heads.foreach { q =>

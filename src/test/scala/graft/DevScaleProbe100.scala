@@ -43,9 +43,7 @@ object DevScaleProbe100 {
     def drain(): Unit =
       org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
     def run(name: String, d: String): (Double, Long, Long, Long, String) = {
-      operators.GraphOps.clearMemos(spark)
-      operators.DedupOps.clearMemos(spark)
-      operators.VectorOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       drain()
       val (w0, r0, _, s0) = telemetry.snapshot

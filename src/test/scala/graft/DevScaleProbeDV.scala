@@ -111,9 +111,7 @@ object DevScaleProbeDV {
     spark.sparkContext.setLogLevel("ERROR")
     synth(spark, probeDir)
     def run(d: String): Seq[(String, Double)] = {
-      operators.GraphOps.clearMemos(spark)
-      operators.DedupOps.clearMemos(spark)
-      operators.VectorOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       heads.map { case (name, fn) =>
         val t0 = System.nanoTime()

@@ -156,9 +156,7 @@ object DevScaleProbeSK {
     val telemetry = new Bench.ShuffleTelemetry
     spark.sparkContext.addSparkListener(telemetry)
     def run(d: String): Seq[(String, Double, Long)] = {
-      operators.GraphOps.clearMemos(spark)
-      operators.DedupOps.clearMemos(spark)
-      operators.VectorOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       heads.map { case name =>
         org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)

@@ -107,9 +107,7 @@ object DevScaleProbeTP {
     def drain(): Unit =
       org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
     def run(d: String): Seq[(String, Double, Long)] = {
-      operators.GraphOps.clearMemos(spark)
-      operators.DedupOps.clearMemos(spark)
-      operators.VectorOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       heads.map { case (name, _) =>
         drain()

@@ -74,9 +74,7 @@ object DevScaleProbeTS {
     def drain(): Unit =
       org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
     def run(d: String): Seq[(String, Double, Long)] = {
-      operators.GraphOps.clearMemos(spark)
-      operators.DedupOps.clearMemos(spark)
-      operators.VectorOps.clearMemos(spark)
+      SessionMemo.clear(spark)
       spark.catalog.clearCache()
       heads.map { name =>
         drain()

@@ -22,7 +22,7 @@ class PlanAuditSpec extends SparkTestBase {
     spark.conf.unset(operators.GraphOps.PlanOnlyKey)
     // memos built under planOnly are unlatched cached frames — drop
     // them so execution suites latch fresh
-    operators.GraphOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     super.afterAll()
   }
 
@@ -740,7 +740,7 @@ class PlanAuditSpec extends SparkTestBase {
     // re-deriving dir/adj/intersect — the plan must contain the cache
     // scan and must NOT contain a fresh array_intersect derivation.
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    operators.GraphOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     spark.catalog.clearCache()
     SparkEntry.queries("graph_triangles")(spark, sf001).collect() // warms memo
     for (q <- Seq("graph_edge_support", "graph_triangle_participation")) {

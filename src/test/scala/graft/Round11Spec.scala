@@ -77,21 +77,19 @@ class Round11Spec extends SparkTestBase {
 
   test("memo_build attribution: a fresh walk-memo build logs under its label " +
       "(VERDICT r10 #7)") {
-    graft.operators.GraphOps.clearMemos(spark)
-    graft.operators.DedupOps.clearMemos(spark)
-    graft.operators.GraphOps.drainMemoBuildTimes()
+    SessionMemo.clear(spark)
+    SessionMemo.drainBuildTimes()
     SparkEntry.queries("graph_walk_sample")(spark, sf001).count()
     SparkEntry.queries("dedup_cluster_canonical")(spark, sf001).count()
-    val built = graft.operators.GraphOps.drainMemoBuildTimes()
+    val built = SessionMemo.drainBuildTimes()
     assert(built.contains("walk"),
       s"walk memo build must log its seconds, got ${built.keySet}")
     assert(built.contains("dedupCanon"),
       s"cross-module (DedupOps) labels must log too, got ${built.keySet}")
     assert(built("walk") >= 0.0)
     // drained — a second read is empty until the next build
-    assert(graft.operators.GraphOps.drainMemoBuildTimes().isEmpty)
-    graft.operators.GraphOps.clearMemos(spark)
-    graft.operators.DedupOps.clearMemos(spark)
+    assert(SessionMemo.drainBuildTimes().isEmpty)
+    SessionMemo.clear(spark)
   }
 
   test("embedding-LSH candidate-mass guard: refuses loudly past the cap, " +
@@ -99,7 +97,7 @@ class Round11Spec extends SparkTestBase {
     import graft.operators.DedupOps
     def run() = SparkEntry.queries("dedup_embedding_cluster")(spark, sf001)
       .collect().map(_.toString).sorted.toSeq
-    graft.operators.DedupOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     val baseline = run()
     // a negative cap must trip on ANY corpus (mass ≥ 0 can never be
     // legal) — r12's adaptive re-banding means a cap of 0 may now

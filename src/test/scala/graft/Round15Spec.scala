@@ -90,6 +90,11 @@ class Round15Spec extends SparkTestBase {
     val newW = df.select(expr("sorted_intersect(nu, nv)").as(Seq("w")))
       .collect().map(_.getLong(0)).toSeq
     assert(newW == oldW, s"witnesses differ: ${newW.size} vs ${oldW.size}")
+    // nullable elements fail analysis instead of merging as 0
+    val nullable = Seq((Seq(Some(1L), None), Seq(1L))).toDF("nu", "nv")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      nullable.select(expr("sorted_intersect(nu, nv)"))
+    }
   }
 
   test("mergeCcDelta driver union-find endgame ≡ the distributed CC " +

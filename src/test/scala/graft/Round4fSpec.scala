@@ -347,7 +347,7 @@ class Round4fSpec extends SparkTestBase {
     writeFixture(dir, "lineitem", Seq(
       (1L, 1L), (1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L))
       .toDF("l_orderkey", "l_partkey"))
-    operators.GraphOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     val got = operators.GraphOps.queries("graph_edge_support")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((0L, 1L), (1L, 3L)), s"got $got")
@@ -557,7 +557,7 @@ class Round4fSpec extends SparkTestBase {
         "o_orderdate", "o_orderpriority"))
     writeFixture(dir, "lineitem", Seq((1L, 7L), (1L, 8L), (1L, 9L))
       .toDF("l_orderkey", "l_suppkey"))
-    operators.GraphOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     val got = operators.GraphOps.queries("graph_centralization")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).head
     assert(got == ((4L, 3L, 1.0)), s"got $got")
@@ -1148,7 +1148,7 @@ class Round4fSpec extends SparkTestBase {
     writeFixture(dir, "lineitem", Seq(
       (1L, 1L), (1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L))
       .toDF("l_orderkey", "l_partkey"))
-    operators.GraphOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     val got = operators.GraphOps
       .queries("graph_triangle_participation")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).head

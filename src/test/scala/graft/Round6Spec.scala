@@ -59,7 +59,7 @@ class Round6Spec extends SparkTestBase {
     // InMemoryTableScan and must NOT re-run the wedge explode (the
     // flatten(transform(...)) pair fan-out).
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    operators.GraphOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     spark.catalog.clearCache()
     SparkEntry.queries("graph_common_neighbors")(spark, sf001).collect()
     for (q <- Seq("graph_adamic_adar", "graph_neighbor_jaccard")) {
@@ -96,7 +96,7 @@ class Round6Spec extends SparkTestBase {
     // construction. (Execution paths DO latch the seed-BFS memos
     // eagerly since r7 — VERDICT r6 #1 — which is exactly why the
     // audit paths need the conf.)
-    operators.GraphOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     spark.catalog.clearCache()
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -120,7 +120,7 @@ class Round6Spec extends SparkTestBase {
       spark.sparkContext.removeSparkListener(listener)
       // the memos latched under planOnly are UNLATCHED cached frames —
       // drop them so later tests latch fresh on first construction
-      operators.GraphOps.clearMemos(spark)
+      SessionMemo.clear(spark)
     }
   }
 

@@ -327,19 +327,38 @@ class Round9Spec extends SparkTestBase {
       s"expected the ambiguity refusal, got: $e")
   }
 
-  test("embedding-cluster signature table memoizes and evicts via clearMemos") {
-    operators.DedupOps.clearMemos(spark)
-    val b0 = operators.GraphOps.memoBuilds.get()
-    operators.DedupOps.queries("dedup_embedding_cluster")(spark, sf001)
-    val b1 = operators.GraphOps.memoBuilds.get()
-    assert(b1 > b0, "first construction must BUILD the signature memo")
-    operators.DedupOps.queries("dedup_embedding_cluster")(spark, sf001)
-    val b2 = operators.GraphOps.memoBuilds.get()
-    assert(b2 == b1,
-      "second construction in one session must reuse the latched table")
-    operators.DedupOps.clearMemos(spark)
-    operators.DedupOps.queries("dedup_embedding_cluster")(spark, sf001)
-    assert(operators.GraphOps.memoBuilds.get() > b2,
-      "clearMemos must evict so the next construction rebuilds")
+  test("memos build once, are reused, and SessionMemo.clear evicts and " +
+      "releases them") {
+    val sc = spark.sparkContext
+    // (key, memo label, loop checkpoints the key persists that no memo
+    // owns, so the clear leaves them: dedup_embedding_cluster's
+    // connected-components labels, the refresh's final PageRank frame)
+    val cases = Seq(
+      ("dedup_embedding_cluster", "embSig", 2),
+      ("vec_pca_power", "gram", 0),
+      ("pipeline_patent_refresh", "patentMerged", 1))
+    for ((key, label, kept) <- cases) {
+      SessionMemo.clear(spark)
+      SessionMemo.drainBuildTimes()
+      val before = sc.getPersistentRDDs.keySet
+      SparkEntry.queries(key)(spark, sf001).count()
+      assert(SessionMemo.drainBuildTimes().contains(label),
+        s"$key: first construction must BUILD the $label memo")
+      val persisted = sc.getPersistentRDDs.keySet -- before
+      assert(persisted.size > kept, s"$key: the builds persisted nothing")
+      val b = SessionMemo.builds.get()
+      SparkEntry.queries(key)(spark, sf001)
+      assert(SessionMemo.builds.get() == b,
+        s"$key: second construction in one session must reuse $label")
+      SessionMemo.clear(spark)
+      val left = sc.getPersistentRDDs.keySet.intersect(persisted)
+      assert(left.size <= kept,
+        s"$key: SessionMemo.clear left persisted RDDs ${left.toSeq.sorted}")
+      SparkEntry.queries(key)(spark, sf001)
+      assert(SessionMemo.drainBuildTimes().contains(label),
+        s"$key: SessionMemo.clear must evict $label so the next " +
+          "construction rebuilds")
+    }
+    SessionMemo.clear(spark)
   }
 }

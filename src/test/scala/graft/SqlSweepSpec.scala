@@ -120,39 +120,43 @@ class SqlSweepSpec extends SparkTestBase {
       val s = spark.newSession()
       SqlFrontend.register(s, sweepDir)
       sweepConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      var k = queue.poll()
-      while (k != null) {
-        val t0 = System.nanoTime()
-        val dsl0 = () => fingerprint(SparkEntry.queries(k)(s, sweepDir))
-        // tier 1: the oracle text as-is
-        val tier1 =
-          try Some(fingerprint(s.sql(SparkEntry.oracleSql(k))))
-          catch { case scala.util.control.NonFatal(_) => None }
-        tier1 match {
-          case Some(viaSql) =>
-            if (viaSql == dsl0()) outcome.put(k, ("shared", ""))
-            else outcome.put(k, ("failed", "tier1 mismatch"))
-          case None =>
-            // tier 2: the engine's Spark-dialect spelling — mandatory
-            SparkDialect.sparkSqlFor(k, SparkEntry.oracleSql(k)) match {
-              case None => outcome.put(k, ("ne", ""))
-              case Some(sql) =>
-                try {
-                  val viaSql = fingerprint(s.sql(sql))
-                  if (viaSql == dsl0()) outcome.put(k, ("transpiled", ""))
-                  else outcome.put(k, ("failed", "tier2 mismatch"))
-                } catch {
-                  case scala.util.control.NonFatal(e) =>
-                    outcome.put(k, ("failed",
-                      "tier2 " + e.getClass.getSimpleName +
-                        ": " + Option(e.getMessage).getOrElse("")
-                          .linesIterator.take(1).mkString.take(160)))
-                }
-            }
+      // the worker's memos would otherwise stay cached on the shared
+      // block manager for the rest of the suite
+      try {
+        var k = queue.poll()
+        while (k != null) {
+          val t0 = System.nanoTime()
+          val dsl0 = () => fingerprint(SparkEntry.queries(k)(s, sweepDir))
+          // tier 1: the oracle text as-is
+          val tier1 =
+            try Some(fingerprint(s.sql(SparkEntry.oracleSql(k))))
+            catch { case scala.util.control.NonFatal(_) => None }
+          tier1 match {
+            case Some(viaSql) =>
+              if (viaSql == dsl0()) outcome.put(k, ("shared", ""))
+              else outcome.put(k, ("failed", "tier1 mismatch"))
+            case None =>
+              // tier 2: the engine's Spark-dialect spelling — mandatory
+              SparkDialect.sparkSqlFor(k, SparkEntry.oracleSql(k)) match {
+                case None => outcome.put(k, ("ne", ""))
+                case Some(sql) =>
+                  try {
+                    val viaSql = fingerprint(s.sql(sql))
+                    if (viaSql == dsl0()) outcome.put(k, ("transpiled", ""))
+                    else outcome.put(k, ("failed", "tier2 mismatch"))
+                  } catch {
+                    case scala.util.control.NonFatal(e) =>
+                      outcome.put(k, ("failed",
+                        "tier2 " + e.getClass.getSimpleName +
+                          ": " + Option(e.getMessage).getOrElse("")
+                            .linesIterator.take(1).mkString.take(160)))
+                  }
+              }
+          }
+          keyMs.put(k, (System.nanoTime() - t0) / 1000000L)
+          k = queue.poll()
         }
-        keyMs.put(k, (System.nanoTime() - t0) / 1000000L)
-        k = queue.poll()
-      }
+      } finally SessionMemo.clear(s)
     }
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val threads = (1 to SweepWorkers).map { i =>

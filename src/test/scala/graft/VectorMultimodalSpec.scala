@@ -160,7 +160,7 @@ class VectorMultimodalSpec extends SparkTestBase {
     // the decimal-exact updates make the whole iteration reproducible:
     // drop the codebook memo first so run2 RE-TRAINS rather than
     // reading run1's cached result (a memo hit would make this vacuous)
-    operators.VectorOps.clearMemos(spark)
+    SessionMemo.clear(spark)
     val run2 = operators.VectorOps.queries("vec_kmeans_cells")(spark, dir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(run2 == run1)
