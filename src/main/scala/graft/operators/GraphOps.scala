@@ -15,14 +15,17 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *
   * Design for scale:
   *  - `edges` is computed once per query and cached when iterated.
-  *  - Iterative algorithms (CC, PageRank) are driver-side loops over
-  *    DataFrames. The big edge side is hash-partitioned on the join
-  *    key ONCE and cached; each iteration then shuffles only the
-  *    per-vertex state (labels / ranks) to meet it, and AQE upgrades
-  *    that to a runtime broadcast while the state is small. No plan
-  *    ever REQUIRES a full-vertex-set broadcast, so the same loop
-  *    survives graphs whose vertex table exceeds executor memory —
-  *    the scalable shape (Pregel-in-DataFrames).
+  *  - Iterative algorithms (CC, PageRank, kCore, kTruss, LPA, Borůvka,
+  *    HITS) are driver-side loops over DataFrames. The big edge side is
+  *    hash-partitioned on the join key ONCE and cached; each iteration
+  *    then shuffles only the per-vertex state (labels / ranks) to meet
+  *    it, broadcast while its MEASURED size is small. No plan ever
+  *    REQUIRES a full-vertex-set broadcast, so the same loop survives
+  *    graphs whose vertex table exceeds executor memory — the scalable
+  *    shape (Pregel-in-DataFrames).
+  *  - Every loop runs in one [[loop]] scope: AQE off and a pinned
+  *    shuffle width for the loop only, restored on exit, and the
+  *    loop's caches and superseded checkpoints released in one place.
   *  - `localCheckpoint` truncates lineage every few iterations —
   *    without it, the plan tree doubles per iteration and the
   *    optimizer re-walks it each action (the classic iterative-Spark
@@ -357,24 +360,123 @@ object GraphOps {
   private[graft] def planOnly(s: SparkSession): Boolean =
     s.conf.get(PlanOnlyKey, "false").toBoolean
 
-  /** A/B override for the iterative-loop AQE pin (r14, VERDICT r13
-    * #7): the loops pin spark.sql.adaptive.enabled=false from a
-    * round-3 measurement (~40 jobs vs ~6 per 10-round PageRank —
-    * AQE splits every materializing action into one job per shuffle
-    * query stage). `true` leaves AQE on inside the loops so the pin
-    * can be re-measured on the current runtime without a code edit
-    * (re-measured on Spark 4.1.2 in r14: AQE-on graph_pagerank
-    * 44 jobs / 5.91 s vs pinned 21 jobs / 3.94 s warm min at sf0.1 —
-    * pin re-justified, see OPTIMIZATION_r14.md). Dev-only knob;
-    * results are identical either way. A/B caveat (ADVICE r14 #4):
-    * since r14 removed the explicit post-aggregate repartitions inside
-    * the loops, an AQE-on run also lets AQE coalesce the state
-    * exchanges — flipping this knob no longer isolates the job-split
-    * effect alone; treat AQE-on numbers as the combined effect. */
-  val LoopAqeKey = "graft.graph.loopAqe"
-  private[operators] def loopAqe(
-      conf: org.apache.spark.sql.RuntimeConfig): String =
-    if (conf.get(LoopAqeKey, "false").toBoolean) "true" else "false"
+  private val AqeKey = "spark.sql.adaptive.enabled"
+  private val WidthKey = "spark.sql.shuffle.partitions"
+
+  /** One graph loop's execution scope — the superstep policy that
+    * kTruss, graph_hits_bounded, connectedComponents, boruvkaMsf,
+    * kCore, labelPropagation and pageRank share (Pregelix's superstep:
+    * one join-plus-group-by under one execution policy).
+    *
+    * Conf pin: for the body, AQE is off and the shuffle width is
+    * `parts`. Every loop join reads cached/checkpointed state whose
+    * partitioning is already explicit, so AQE only hurts: it splits
+    * each materializing action into one job per shuffle query stage,
+    * each paying driver re-planning latency (round 3: ~40 jobs instead
+    * of ~6 per 10-round PageRank; re-measured on Spark 4.1.2 in r14:
+    * AQE-on graph_pagerank 44 jobs / 5.91 s vs pinned 21 jobs / 3.94 s
+    * warm min at sf0.1, OPTIMIZATION_r14.md). On exit, a throw
+    * included, both keys get back the values the scope found, so a
+    * nested loop (CC inside mergeCcDelta or a memo build) hands back
+    * its enclosing loop's pin, not the session default. Work that
+    * scans raw inputs (edge derivation, state init) runs BEFORE the
+    * scope, under the session conf and its full parallelism.
+    *
+    * Storage: everything the body registers with its [[Loop]] is
+    * released by the scope; on exit every cache is unpersisted and
+    * every checkpoint the returned frame does not scan is freed. */
+  private def loop(spark: SparkSession, parts: Int)(
+      body: Loop => DataFrame): DataFrame = {
+    val conf = spark.conf
+    val found = Seq(AqeKey, WidthKey).map(k => k -> conf.getOption(k))
+    conf.set(AqeKey, "false")
+    conf.set(WidthKey, parts.toString)
+    val lp = new Loop(conf)
+    var out: Option[DataFrame] = None
+    try {
+      out = Some(body(lp))
+      out.get
+    } finally {
+      lp.close(out)
+      found.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
+  }
+
+  /** the storage a [[loop]] body hands to its scope:
+    *  - `keep(df)`: a cached frame the whole loop reads (edge sets,
+    *    degree tables), unpersisted on exit.
+    *  - `link(df)`: a cached link of the state lineage, unpersisted
+    *    once a checkpoint latched after it has materialized — that
+    *    checkpoint truncated the chain.
+    *  - `latch(track, cp)`: the newest localCheckpoint of the loop
+    *    state named `track`. Older checkpoints of the track are freed
+    *    once it has materialized, never before: checkpoint blocks
+    *    cannot be recomputed (the rule pageRank introduced).
+    * An eager checkpoint is materialized when latched; a lazy one by
+    * the next `count`, the loop-control action, which must read every
+    * lazy checkpoint latched since the previous count. */
+  private final class Loop(conf: org.apache.spark.sql.RuntimeConfig) {
+    private final class Latched(val track: String, val df: DataFrame,
+        val seq: Int) {
+      val rdd = df.queryExecution.logical match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+        case p => throw new IllegalArgumentException(
+          s"latch expects a localCheckpoint'd frame, got:\n$p")
+      }
+      var materialized: Boolean = rdd.isCheckpointed
+    }
+    private var seq = 0
+    private var kept = List.empty[DataFrame]
+    private var links = List.empty[(Int, DataFrame)]
+    private var latched = List.empty[Latched]
+
+    /** re-pin the shuffle width for the rest of the body */
+    def width(n: Int): Unit = conf.set(WidthKey, n.toString)
+
+    def keep(df: DataFrame): DataFrame = { kept ::= df; df }
+
+    def link(df: DataFrame): DataFrame = { seq += 1; links ::= seq -> df; df }
+
+    def latch(track: String, cp: DataFrame): DataFrame = {
+      seq += 1
+      latched ::= new Latched(track, cp, seq)
+      sweep()
+      cp
+    }
+
+    def count(df: DataFrame): Long = {
+      val n = df.count()
+      latched.foreach(_.materialized = true)
+      sweep()
+      n
+    }
+
+    private def sweep(): Unit = {
+      val done = latched.filter(_.materialized)
+      val newest = done.groupMapReduce(_.track)(_.seq)(math.max)
+      val (stale, live) =
+        latched.partition(c => newest.get(c.track).exists(_ > c.seq))
+      stale.foreach(c => SessionMemo.releaseLocalCheckpoint(c.df))
+      latched = live
+      val truncated = done.map(_.seq).maxOption.getOrElse(0)
+      val (dead, held) = links.partition(_._1 < truncated)
+      dead.foreach(_._2.unpersist())
+      links = held
+    }
+
+    /** release what is left — quietly, so a failed action's own
+      * exception is the one that surfaces */
+    def close(out: Option[DataFrame]): Unit = {
+      val scanned = out.fold(Set.empty[Int])(_.queryExecution.logical
+        .collect { case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.rdd.id }.toSet)
+      def quietly(f: => Unit): Unit =
+        try f catch { case scala.util.control.NonFatal(_) => () }
+      (kept ++ links.map(_._2)).foreach(df => quietly(df.unpersist()))
+      latched.filterNot(c => scanned(c.rdd.id))
+        .foreach(c => quietly(SessionMemo.releaseLocalCheckpoint(c.df)))
+    }
+  }
 
   /** materialize `df` NOW (unless [[PlanOnlyKey]]) as a localCheckpoint
     * so a multi-reference consumer plan scans warm blocks instead of
@@ -940,10 +1042,9 @@ object GraphOps {
     * adjacency rebuild + wedge re-intersection. Exact: every triangle
     * of the surviving subgraph is a round-0 triangle whose edges all
     * survive, and the degree-orientation was only ever an enumeration
-    * heuristic, not part of the result. Loop discipline = kCore's:
-    * AQE off + pinned width inside the loop, lazy checkpoints
-    * materialized by the loop-control count, each round's triangle
-    * checkpoint released once the next is materialized.
+    * heuristic, not part of the result. Runs in a [[loop]] scope:
+    * lazy checkpoints materialized by the loop-control count, each
+    * round's edge and triangle checkpoints freed once the next are.
     *
     * `oracleRounds` (ADVICE r5 #1): the unrolled-CTE oracle peels a
     * FIXED number of rounds; idempotence past convergence makes any
@@ -959,36 +1060,29 @@ object GraphOps {
     val spark = und.sparkSession
     val p = if (numParts > 0) numParts
       else spark.sessionState.conf.numShufflePartitions
-    var e = und.select(col("a"), col("b")).localCheckpoint(false)
-    var n = e.count()
-    val conf = spark.conf
-    val aqeWas = conf.get("spark.sql.adaptive.enabled", "true")
-    val shufWas = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", loopAqe(conf))
-    conf.set("spark.sql.shuffle.partitions", p.toString)
-    try {
+    val e0 = und.select(col("a"), col("b")).localCheckpoint(false)
+    var n = e0.count()
+    loop(spark, p) { lp =>
+      var e = lp.latch("edges", e0)
       var iter = 0
       var done = false
-      var out: DataFrame = e.select(col("a"), col("b"), lit(0L).as("support"))
       // round-0 enumeration, projected ONCE to the three canonical
-      // (x_i < y_i) edges per triangle — the maintained loop state
-      val (tri0, releaseAdj): (DataFrame, () => Unit) = firstTri match {
-        // round 0 rides the session-memoized full-graph relation
-        // when the caller's edge set IS that graph
-        case Some(t) => (t, () => ())
-        case None =>
-          val (t, adj) = orientedTriangles(e, n <= edgeCap(spark))
-          (t, () => adj.unpersist())
+      // (x_i < y_i) edges per triangle — the maintained loop state.
+      // Round 0 rides the session-memoized full-graph relation when
+      // the caller's edge set IS that graph.
+      val tri0 = firstTri.getOrElse {
+        val (t, adj) = orientedTriangles(e, n <= edgeCap(spark))
+        lp.link(adj) // released once round 0's count has read it
+        t
       }
-      var tri = tri0.select(
+      var tri = lp.latch("tri", tri0.select(
           least(col("u"), col("v")).as("x1"),
           greatest(col("u"), col("v")).as("y1"),
           least(col("u"), col("w")).as("x2"),
           greatest(col("u"), col("w")).as("y2"),
           least(col("v"), col("w")).as("x3"),
           greatest(col("v"), col("w")).as("y3"))
-        .localCheckpoint(false) // materialized by round 0's count
-      var prevTri: DataFrame = null // released once the next is warm
+        .localCheckpoint(false)) // materialized by round 0's count
       while (!done && iter < maxIters) {
         val sup = tri.select(explode(array(
             struct(col("x1").as("a"), col("y1").as("b")),
@@ -996,40 +1090,31 @@ object GraphOps {
             struct(col("x3").as("a"), col("y3").as("b")))).as("x"))
           .select(col("x.a").as("a"), col("x.b").as("b"))
           .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-        val e2 = e.select(col("a"), col("b"))
+        e = lp.latch("edges", e.select(col("a"), col("b"))
           .join(sup, Seq("a", "b"), "left")
           .select(col("a"), col("b"),
             coalesce(col("support"), lit(0L)).as("support"))
           .filter(col("support") >= k - 2)
-          .localCheckpoint(false) // materialized by the count below
-        val n2 = e2.count()
-        if (iter == 0) releaseAdj()
-        // this round's tri is materialized (the count above consumed
-        // it) — the previous round's checkpoint blocks can go
-        if (prevTri != null) { SessionMemo.releaseLocalCheckpoint(prevTri); prevTri = null }
-        // fixpoint: nothing dropped, so e2's supports are the
-        // in-truss supports of the surviving subgraph
+          .localCheckpoint(false)) // materialized by the count below
+        val n2 = lp.count(e)
+        // fixpoint: nothing dropped, so e's supports are the in-truss
+        // supports of the surviving subgraph
         done = n2 == n
         n = n2
-        out = e2
-        e = e2
         iter += 1
         if (!done) {
           // triangles(G_r): keep rows whose three edges all survive —
           // semi-joins, broadcast under the measured edge-count gate
           def semiKeep(t: DataFrame, xi: String, yi: String): DataFrame = {
-            val sv = e2.select(col("a").as(s"${xi}_s"), col("b").as(s"${yi}_s"))
+            val sv = e.select(col("a").as(s"${xi}_s"), col("b").as(s"${yi}_s"))
             val svS = if (n2 <= edgeCap(spark)) broadcast(sv) else sv
             t.join(svS, col(xi) === col(s"${xi}_s") &&
               col(yi) === col(s"${yi}_s"), "left_semi")
           }
-          prevTri = tri
-          tri = semiKeep(semiKeep(semiKeep(tri, "x1", "y1"), "x2", "y2"),
-            "x3", "y3").localCheckpoint(false)
+          tri = lp.latch("tri", semiKeep(semiKeep(semiKeep(tri, "x1", "y1"),
+            "x2", "y2"), "x3", "y3").localCheckpoint(false))
         }
       }
-      if (prevTri != null) SessionMemo.releaseLocalCheckpoint(prevTri)
-      SessionMemo.releaseLocalCheckpoint(tri)
       if (!done) throw new IllegalStateException(
         s"kTruss did not converge in $maxIters rounds")
       oracleRounds.foreach(cap => if (iter > cap)
@@ -1037,10 +1122,7 @@ object GraphOps {
           s"kTruss converged in $iter rounds but the unrolled oracle " +
             s"peels only $cap — bump KtrussOracleRounds ≥ $iter or the " +
             "oracle hash checks a pre-fixpoint state"))
-      out
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", aqeWas)
-      conf.set("spark.sql.shuffle.partitions", shufWas)
+      e
     }
   }
 
@@ -2224,18 +2306,11 @@ object GraphOps {
       val verts = e.select(col("src").as("v"))
         .union(e.select(col("dst").as("v"))).distinct()
         .repartition(parts, col("v")).localCheckpoint()
-      // iterative-loop execution discipline (the pageRank/CC shape):
-      // AQE off + shuffle width pinned for the loop, lineage truncated
-      // per step (2·HitsRounds chained joins otherwise stack into
-      // multi-MB task binaries — measured 7 MiB at sf0.01), cached
-      // intermediates released on exit
-      val conf = s.conf
-      val aqeWas = conf.get("spark.sql.adaptive.enabled", "true")
-      val shufWas = conf.get("spark.sql.shuffle.partitions")
-      conf.set("spark.sql.adaptive.enabled", loopAqe(conf))
-      conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try {
-        var toRelease = List.empty[DataFrame]
+      // a [[loop]] scope, lineage truncated per step (2·HitsRounds
+      // chained joins otherwise stack into multi-MB task binaries —
+      // measured 7 MiB at sf0.01)
+      loop(s, parts) { lp =>
+        lp.latch("verts", verts)
         // the power steps alternate join keys (src for the auth pull,
         // dst for the hub pull), and the memoized edge cache is
         // partitioned on neither — so every step re-exchanged the FULL
@@ -2243,8 +2318,10 @@ object GraphOps {
         // checkpointed copies pay that exchange once per orientation
         // (r14, guide §2.4: two operations keyed the same way share one
         // exchange); each step then shuffles only the vertex state.
-        val eBySrc = e.repartition(parts, col("src")).localCheckpoint(false)
-        val eByDst = e.repartition(parts, col("dst")).localCheckpoint(false)
+        val eBySrc = lp.latch("bySrc",
+          e.repartition(parts, col("src")).localCheckpoint(false))
+        val eByDst = lp.latch("byDst",
+          e.repartition(parts, col("dst")).localCheckpoint(false))
         // one normalized power step: raw[v] = Σ state over the edges
         // incident at `to`, framed to the full vertex set, then
         // L1-normalized back to Σx = 10⁶ in integer space — the total
@@ -2255,43 +2332,29 @@ object GraphOps {
               eK(from) === col("sv"))
             .groupBy(eK(to).as("cv"))
             .agg(sum(col("x").cast(dec)).as("sx"))
-          val framed = verts.join(raw, col("v") === col("cv"), "left")
+          val framed = lp.link(verts.join(raw, col("v") === col("cv"), "left")
             .select(col("v"), coalesce(col("sx"), lit(0).cast(dec)).as("r"))
-            .cache() // consumed twice: the total and the normalization
-          toRelease ::= framed
+            .cache()) // consumed twice: the total and the normalization
           val tot = framed.agg(sum(col("r")).as("t"))
-          framed.crossJoin(broadcast(tot))
-            .select(col("v"), expr("(r * 1000000) DIV t").as("x"))
-            .localCheckpoint()
+          lp.latch(if (to == "dst") "auth" else "hub",
+            framed.crossJoin(broadcast(tot))
+              .select(col("v"), expr("(r * 1000000) DIV t").as("x"))
+              .localCheckpoint())
         }
-        try {
-          var h = verts.withColumn("x", lit(1000000L))
-          var a: DataFrame = null
-          (1 to HitsRounds).foreach { _ =>
-            a = step(h, "src", "dst")
-            h = step(a, "dst", "src")
-          }
-          h.withColumnRenamed("x", "hx")
-            .join(a.withColumnRenamed("x", "ax"), Seq("v"))
-            .select(col("v"),
-              (floor((col("hx") + 50) / 100).cast(DoubleType) / 10000.0)
-                .as("hub"),
-              (floor((col("ax") + 50) / 100).cast(DoubleType) / 10000.0)
-                .as("auth"))
-            .orderBy(col("v"))
-        } finally {
-          toRelease.foreach(_.unpersist())
-          // r15 (ADVICE r14 #1): the two edge orientations are
-          // loop-scoped and every loop step has materialized (each
-          // step ends in an EAGER localCheckpoint, and the final join
-          // reads only h/a blocks) — free their checkpoint blocks now
-          // instead of leaking them until ContextCleaner GC
-          SessionMemo.releaseLocalCheckpoint(eBySrc)
-          SessionMemo.releaseLocalCheckpoint(eByDst)
+        var h = verts.withColumn("x", lit(1000000L))
+        var a: DataFrame = null
+        (1 to HitsRounds).foreach { _ =>
+          a = step(h, "src", "dst")
+          h = step(a, "dst", "src")
         }
-      } finally {
-        conf.set("spark.sql.adaptive.enabled", aqeWas)
-        conf.set("spark.sql.shuffle.partitions", shufWas)
+        h.withColumnRenamed("x", "hx")
+          .join(a.withColumnRenamed("x", "ax"), Seq("v"))
+          .select(col("v"),
+            (floor((col("hx") + 50) / 100).cast(DoubleType) / 10000.0)
+              .as("hub"),
+            (floor((col("ax") + 50) / 100).cast(DoubleType) / 10000.0)
+              .as("auth"))
+          .orderBy(col("v"))
       }
     }))
 
@@ -2824,13 +2887,13 @@ object GraphOps {
     //
     // The edge derivation + label init below run under the SESSION conf
     // (AQE on, full shuffle width): they scan/join the raw inputs and
-    // want full parallelism. Only the iteration loop runs under the
-    // pinned conf (see below).
+    // want full parallelism. Only the iteration loop runs in the
+    // [[loop]] scope.
     val sym =
       if (symmetrized) edgeDf
       else edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().repartition(p, col("src")).cache()
-    var labels = sym.select(col("src").as("v")).distinct()
+    val labels0 = sym.select(col("src").as("v")).distinct()
       .withColumn("lbl", col("v")).repartition(p, col("v")).localCheckpoint()
     // join strategy by MEASURED vertex count (see BroadcastStateMaxRows
     // — AQE can't replan joins over cached/checkpointed inputs): small
@@ -2843,24 +2906,12 @@ object GraphOps {
     // iteration, and on a loaded box per-job latency — not compute —
     // dominates an iterative query (round-2 driver bench post-mortem),
     // so the shuffle join wins until the edge side is genuinely wide.
-    val bcastState = labels.count() <= stateCap(spark) && p > 8
-    // Iterative-loop execution discipline (the Pregel-on-DataFrames
-    // standard): AQE OFF and shuffle width pinned to p for the loop's
-    // actions — every join here is over cached/checkpointed state whose
-    // partitioning is already explicit, and AQE only hurts: it splits
-    // each materializing action into one job PER shuffle query stage,
-    // each paying driver re-planning latency (measured ~40 jobs instead
-    // of ~6 for a 10-iteration PageRank). Restored in the finally.
-    val conf = spark.conf
-    val aqeWas = conf.get("spark.sql.adaptive.enabled", "true")
-    val shufWas = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", loopAqe(conf))
-    conf.set("spark.sql.shuffle.partitions", p.toString)
-    try {
-    var changed = 1L
-    var iter = 0
-    var pinned = List.empty[DataFrame] // per-iteration caches to release
-    try {
+    val bcastState = labels0.count() <= stateCap(spark) && p > 8
+    loop(spark, p) { lp =>
+      if (!symmetrized) lp.keep(sym)
+      var labels = lp.latch("labels", labels0)
+      var changed = 1L
+      var iter = 0
       while (changed > 0 && iter < maxIters) {
         val l = if (bcastState) broadcast(labels) else labels
         // no repartition after the aggregate (r14, guide §2.4): the
@@ -2882,47 +2933,39 @@ object GraphOps {
         // ~15 s at sf0.1. The extra state join + broadcast build per
         // iteration cost more than the ~2 iterations it saves on this
         // graph's single-digit diameter; rejected, single-hop retained.
-        val nextFull = labels.join(prop, labels("v") === prop("v2"), "left")
+        val nextFull = lp.link(labels
+          .join(prop, labels("v") === prop("v2"), "left")
           .select(col("v"), col("lbl").as("prev"),
             least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-          .cache()
-        pinned ::= nextFull
+          .cache())
         changed = nextFull.filter(col("lbl") =!= col("prev")).count()
         labels = nextFull.select(col("v"), col("lbl"))
         iter += 1
         // truncate lineage every 3rd iteration (and at convergence, so
         // the returned frame scans a checkpointed RDD, not the cache
-        // chain about to be released): plans stay ≤3 joins deep and the
-        // checkpoint job price is paid once per 3 iterations, not per 1
-        if (iter % 3 == 0 || changed == 0) {
-          labels = labels.localCheckpoint()
-          pinned.foreach(_.unpersist()); pinned = Nil
-        }
+        // chain the checkpoint releases): plans stay ≤3 joins deep and
+        // the checkpoint job price is paid once per 3 iterations, not
+        // per 1
+        if (iter % 3 == 0 || changed == 0)
+          labels = lp.latch("labels", labels.localCheckpoint())
       }
-    } finally {
-      pinned.foreach(_.unpersist())
-      if (!symmetrized) sym.unpersist() // even on a failed action
-    }
-    // min-label propagation advances one hop per iteration, so a graph
-    // whose diameter exceeds maxIters would exit with changed > 0 —
-    // returning silently-wrong labels. Fail loudly instead: truncated
-    // components are a correctness bug, not a best-effort answer.
-    if (changed > 0) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIters iterations " +
-        s"($changed labels still changing) — graph diameter exceeds maxIters")
-    labels
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", aqeWas)
-      conf.set("spark.sql.shuffle.partitions", shufWas)
+      // min-label propagation advances one hop per iteration, so a graph
+      // whose diameter exceeds maxIters would exit with changed > 0 —
+      // returning silently-wrong labels. Fail loudly instead: truncated
+      // components are a correctness bug, not a best-effort answer.
+      if (changed > 0) throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIters iterations " +
+          s"($changed labels still changing) — graph diameter exceeds maxIters")
+      labels
     }
   }
 
   /** k-core by iterative peeling: drop vertices of degree < k, delete
     * their edges, repeat to fixpoint; returns the surviving vertices
-    * with their in-core degree. Same loop discipline as
-    * connectedComponents — AQE off + pinned width for the loop only,
-    * ONE stats job per iteration (total + surviving vertex counts from
-    * a single aggregate over the cached degree table), lineage
+    * with their in-core degree. Runs in a [[loop]] scope like
+    * connectedComponents: ONE stats job per iteration (total +
+    * surviving vertex counts from a single aggregate over the cached
+    * degree table), lineage
     * truncated every 3rd iteration. The edge set SHRINKS monotonically,
     * so per-iteration cost falls as the peel proceeds. Public library
     * API. */
@@ -2937,8 +2980,8 @@ object GraphOps {
     * comparator return the identical edge set (pinned in GraphSpec's
     * sibling Round4eSpec). Returns the forest edges (a, b, w).
     *
-    * Execution shape (the CC loop discipline — AQE off + pinned
-    * width inside the loop, lineage truncated by localCheckpoint):
+    * Execution shape (a [[loop]] scope like CC's, lineage truncated
+    * by localCheckpoint):
     * the CONTRACTED multigraph is the loop state — after each round
     * edges relabel to component endpoints and collapse to the min
     * struct per component pair, so the working set SHRINKS
@@ -2960,25 +3003,17 @@ object GraphOps {
     val spark = wedges.sparkSession
     val p = if (numParts > 0) numParts
       else spark.sessionState.conf.numShufflePartitions
-    val conf = spark.conf
-    val aqeWas = conf.get("spark.sql.adaptive.enabled", "true")
-    val shufWas = conf.get("spark.sql.shuffle.partitions")
     // contracted multigraph: (ca, cb, w, a, b) with ca < cb; init =
-    // the input edges labeled by themselves. Materialized under the
-    // session conf, loop under the pinned conf (the CC split).
-    // LAZY checkpoint (r5): the loop's g.count() materializes it —
-    // eager would pay a separate job per round for the same scan
-    var g = wedges.select(col("a").as("ca"), col("b").as("cb"),
+    // the input edges labeled by themselves. LAZY checkpoint (r5): the
+    // loop's first count materializes it — eager would pay a separate
+    // job per round for the same scan
+    val g0 = wedges.select(col("a").as("ca"), col("b").as("cb"),
       col("w"), col("a"), col("b")).localCheckpoint(false)
-    conf.set("spark.sql.adaptive.enabled", loopAqe(conf))
-    conf.set("spark.sql.shuffle.partitions", p.toString)
-    // caches live per round and are released at round end; `live`
-    // tracks them so a thrown action mid-round cannot leak blocks
-    var live = List.empty[DataFrame]
-    try {
+    loop(spark, p) { lp =>
+      var g = lp.latch("g", g0)
       var forest = List.empty[DataFrame]
       var round = 0
-      var remaining = g.count()
+      var remaining = lp.count(g)
       val collectCap = mstCollectCap(spark)
       while (remaining > 0 && round < maxRounds) {
         if (remaining <= collectCap) {
@@ -3031,8 +3066,7 @@ object GraphOps {
         // sf0.1 rounds 2+ run single-task, cutting per-stage overhead
         // ~5×. On a real cluster the same rule keeps early rounds at
         // full width.
-        val pr = math.max(1L, math.min(p.toLong, remaining / 50000L)).toInt
-        conf.set("spark.sql.shuffle.partitions", pr.toString)
+        lp.width(math.max(1L, math.min(p.toLong, remaining / 50000L)).toInt)
         // the pointer/choice tables hold ≤ one row per component, and
         // components ≤ 2·remaining — under the state cap every jump
         // and contraction join BROADCASTS (zero shuffle stages; the
@@ -3046,12 +3080,11 @@ object GraphOps {
             col("w"), col("a"), col("b"))
           .unionByName(g.select(col("cb").as("c"), col("ca").as("t"),
             col("w"), col("a"), col("b")))
-        val best = cand.groupBy(col("c"))
+        val best = lp.keep(cand.groupBy(col("c"))
           .agg(min(struct(col("w"), col("a"), col("b"), col("t"))).as("e"))
           .select(col("c"), col("e.t").as("t"), col("e.w").as("w"),
             col("e.a").as("a"), col("e.b").as("b"))
-          .cache()
-        live ::= best
+          .cache())
         // forest entries stay LAZY over the cached best (r5): the old
         // per-round eager localCheckpoint paid one scheduler job per
         // round for data the final union re-scans anyway; now the
@@ -3059,7 +3092,7 @@ object GraphOps {
         forest ::= best.select(col("a"), col("b"), col("w")).distinct()
         // choice graph c → t: break 2-cycles toward the smaller id
         // (which becomes its tree's root), then pointer-jump. The
-        // loop uses cache() + explicit unpersist (the CC pinned-list
+        // loop caches each jump as a lineage link (the CC
         // discipline), NOT per-jump localCheckpoint: checkpoint
         // blocks accumulate for the session lifetime and measurably
         // grow per-shuffle-stage latency (observed 0.1 s → 2 s per
@@ -3072,7 +3105,6 @@ object GraphOps {
           .select(col("c"),
             when(col("t2").isNotNull && col("c") < col("t"), col("c"))
               .otherwise(col("t")).as("t"))
-        var jumpPinned = List.empty[DataFrame]
         var jumping = true
         var jumps = 0
         while (jumping) {
@@ -3086,28 +3118,26 @@ object GraphOps {
           // more than the counts they save. Single squaring +
           // broadcast sides is the winning shape, twice confirmed.
           val hop = ptr.select(col("c").as("c2"), col("t").as("t2"))
-          val next = ptr.join(side(hop), ptr("t") === hop("c2"), "left")
+          val next = lp.link(ptr
+            .join(side(hop), ptr("t") === hop("c2"), "left")
             .select(col("c"), col("t").as("prev"),
               coalesce(col("t2"), col("t")).as("t"))
-            .cache()
+            .cache())
           jumping = next.filter(col("t") =!= col("prev")).count() > 0
-          jumpPinned ::= next
-          live ::= next
           ptr = next.select(col("c"), col("t"))
           jumps += 1
           // truncate lineage every 3rd jump (the CC cadence): plans
           // stay ≤3 joins deep, one checkpoint per 3 jumps
-          if (jumps % 3 == 0 && jumping) {
-            ptr = ptr.localCheckpoint()
-            jumpPinned.foreach(_.unpersist()); jumpPinned = Nil
-          }
+          if (jumps % 3 == 0 && jumping)
+            ptr = lp.latch("ptr", ptr.localCheckpoint())
           vlog(f"round $round jump $jumps: ${(System.nanoTime() - t0) / 1e9}%.2fs")
         }
         // contract: relabel edge endpoints to their roots, drop
         // intra-component edges, keep the min struct per new pair
         val ra = ptr.select(col("c").as("ca"), col("t").as("ra"))
         val rb = ptr.select(col("c").as("cb"), col("t").as("rb"))
-        g = g.join(side(ra), Seq("ca"), "left").join(side(rb), Seq("cb"), "left")
+        g = lp.latch("g", g.join(side(ra), Seq("ca"), "left")
+          .join(side(rb), Seq("cb"), "left")
           .select(coalesce(col("ra"), col("ca")).as("na"),
             coalesce(col("rb"), col("cb")).as("nb"),
             col("w"), col("a"), col("b"))
@@ -3119,13 +3149,11 @@ object GraphOps {
           .agg(min(struct(col("w"), col("a"), col("b"))).as("e"))
           .select(col("ca"), col("cb"), col("e.w").as("w"),
             col("e.a").as("a"), col("e.b").as("b"))
-          .localCheckpoint(false) // materialized by the count below
-        remaining = g.count()
-        // release the round's jump caches — g (checkpointed) no longer
-        // references them. best stays cached: the lazy forest entries
-        // scan it at the final checkpoint; `live` carries it to the
-        // finally for release.
-        jumpPinned.foreach(_.unpersist())
+          .localCheckpoint(false)) // materialized by the count below
+        // the count also releases the round's jump caches — g no longer
+        // references them. best stays kept: the lazy forest entries
+        // scan it at the final checkpoint.
+        remaining = lp.count(g)
         round += 1
         vlog(s"round $round done: $remaining contracted edges remain")
         }
@@ -3134,18 +3162,11 @@ object GraphOps {
         s"boruvkaMsf did not converge in $maxRounds rounds " +
           s"($remaining cross-component edges remain)")
       // ONE eager checkpoint materializes the whole forest off the
-      // cached per-round bests before the finally releases them —
+      // cached per-round bests before the scope releases them —
       // without it the returned plan would recompute every round's
       // min-edge aggregate at the caller's first action
       if (forest.isEmpty) wedges.select(col("a"), col("b"), col("w")).limit(0)
       else forest.reduce(_ unionByName _).distinct().localCheckpoint()
-    } finally {
-      live.foreach { df =>
-        try df.unpersist()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      conf.set("spark.sql.adaptive.enabled", aqeWas)
-      conf.set("spark.sql.shuffle.partitions", shufWas)
     }
   }
 
@@ -3160,67 +3181,50 @@ object GraphOps {
       else edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().repartition(p, col("src")).cache()
     // materialize the edge derivation under the SESSION conf (AQE on,
-    // full width) before pinning — same split as CC/PageRank: only the
-    // peel loop runs at the pinned width
+    // full width) before the scope — same split as CC/PageRank: only
+    // the peel loop runs at the pinned width
     sym0.count()
-    val conf = spark.conf
-    val aqeWas = conf.get("spark.sql.adaptive.enabled", "true")
-    val shufWas = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", loopAqe(conf))
-    conf.set("spark.sql.shuffle.partitions", p.toString)
-    try {
+    loop(spark, p) { lp =>
+      if (!symmetrized) lp.keep(sym0)
       var cur = sym0
-      var pinned = List.empty[DataFrame]
       var converged = false
       var iter = 0
-      try {
-        while (!converged && iter < maxIters) {
-          val deg = cur.groupBy(col("src")).agg(count(lit(1)).as("deg")).cache()
-          pinned ::= deg
-          // one job: materializes the degree cache AND returns both
-          // the current vertex count and the survivor count
-          // count_if, not sum(when(...)): sum over ZERO rows is NULL
-          // (the fully-peeled empty graph would crash the getLong)
-          val row = deg.agg(count(lit(1)).as("total"),
-            count_if(col("deg") >= k).as("good")).first()
-          val (total, good) = (row.getLong(0), row.getLong(1))
-          if (good == total) converged = true
-          else {
-            val keep = deg.filter(col("deg") >= k).select(col("src").as("gv"))
-            val next = cur
-              .join(keep.select(col("gv").as("src")), Seq("src"), "left_semi")
-              .join(keep.select(col("gv").as("dst")), Seq("dst"), "left_semi")
-              .select(col("src"), col("dst"))
-              .repartition(p, col("src"))
-            cur =
-              if ((iter + 1) % 3 == 0) { // truncate lineage periodically
-                val cp = next.localCheckpoint()
-                pinned.foreach(_.unpersist()); pinned = Nil
-                cp
-              } else {
-                val c = next.cache(); pinned ::= c; c
-              }
-            iter += 1
-          }
+      while (!converged && iter < maxIters) {
+        val deg = lp.link(
+          cur.groupBy(col("src")).agg(count(lit(1)).as("deg")).cache())
+        // one job: materializes the degree cache AND returns both
+        // the current vertex count and the survivor count
+        // count_if, not sum(when(...)): sum over ZERO rows is NULL
+        // (the fully-peeled empty graph would crash the getLong)
+        val row = deg.agg(count(lit(1)).as("total"),
+          count_if(col("deg") >= k).as("good")).first()
+        val (total, good) = (row.getLong(0), row.getLong(1))
+        if (good == total) converged = true
+        else {
+          val keep = deg.filter(col("deg") >= k).select(col("src").as("gv"))
+          val next = cur
+            .join(keep.select(col("gv").as("src")), Seq("src"), "left_semi")
+            .join(keep.select(col("gv").as("dst")), Seq("dst"), "left_semi")
+            .select(col("src"), col("dst"))
+            .repartition(p, col("src"))
+          cur =
+            if ((iter + 1) % 3 == 0) // truncate lineage periodically
+              lp.latch("core", next.localCheckpoint())
+            else lp.link(next.cache())
+          iter += 1
         }
-        if (!converged) throw new IllegalStateException(
-          s"kCore did not converge in $maxIters iterations")
-        // the kTruss oracle-cap guard (ADVICE r5 #1): cap exhaustion
-        // fails loudly here, not as a downstream hash mismatch
-        oracleRounds.foreach(cap => if (iter > cap)
-          throw new IllegalStateException(
-            s"kCore (k=$k) peeled $iter rounds but the unrolled oracle " +
-              s"peels only $cap — bump KcoreOracleRounds ≥ $iter"))
-        // in-core degrees of the surviving vertices (cur is the core)
-        cur.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-          .localCheckpoint()
-      } finally {
-        pinned.foreach(_.unpersist())
-        if (!symmetrized) sym0.unpersist()
       }
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", aqeWas)
-      conf.set("spark.sql.shuffle.partitions", shufWas)
+      if (!converged) throw new IllegalStateException(
+        s"kCore did not converge in $maxIters iterations")
+      // the kTruss oracle-cap guard (ADVICE r5 #1): cap exhaustion
+      // fails loudly here, not as a downstream hash mismatch
+      oracleRounds.foreach(cap => if (iter > cap)
+        throw new IllegalStateException(
+          s"kCore (k=$k) peeled $iter rounds but the unrolled oracle " +
+            s"peels only $cap — bump KcoreOracleRounds ≥ $iter"))
+      // in-core degrees of the surviving vertices (cur is the core)
+      cur.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
+        .localCheckpoint()
     }
   }
 
@@ -3243,7 +3247,7 @@ object GraphOps {
     * Scale shape: the edge set stays hash-partitioned on the
     * propagation key; each round exchanges one (vertex, label) row per
     * vertex plus the counted (vertex, label) partials — never raw
-    * edges. Same loop conf discipline as [[connectedComponents]].
+    * edges. Runs in a [[loop]] scope like [[connectedComponents]].
     *
     * CONTRACT for `symmetrized = true` (ADVICE r14 #2): the caller's
     * edge set must actually be symmetric (every (a, b) has its (b, a)
@@ -3263,12 +3267,8 @@ object GraphOps {
       else edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().repartition(p, col("src")).cache()
     sym0.count() // materialize under the session conf (AQE, full width)
-    val conf = spark.conf
-    val aqeWas = conf.get("spark.sql.adaptive.enabled", "true")
-    val shufWas = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", loopAqe(conf))
-    conf.set("spark.sql.shuffle.partitions", p.toString)
-    try {
+    loop(spark, p) { lp =>
+      if (!symmetrized) lp.keep(sym0)
       var labels = sym0.select(col("src").as("v")).distinct()
         .select(col("v"), col("v").as("lbl"))
       for (_ <- 1 to iters) {
@@ -3290,10 +3290,6 @@ object GraphOps {
           .select(col("dst").as("v"), (-col("b.nl")).as("lbl"))
       }
       labels.localCheckpoint() // one eager job for all rounds
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", aqeWas)
-      conf.set("spark.sql.shuffle.partitions", shufWas)
-      if (!symmetrized) sym0.unpersist()
     }
   }
 
@@ -3315,7 +3311,8 @@ object GraphOps {
       else spark.sessionState.conf.numShufflePartitions
     // edge derivation + rank init run under the session conf (AQE on,
     // full width) — they scan the raw inputs and want parallelism; only
-    // the iteration loop below is conf-pinned, as in connectedComponents
+    // the iteration loop below runs in the [[loop]] scope, as in
+    // connectedComponents
     val sym =
       if (symmetrized) edgeDf
       else edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
@@ -3357,7 +3354,7 @@ object GraphOps {
     // already framed against the cached restart vector.
     val verts = restart.map(_.select(col("v")))
       .getOrElse(outDeg.select(col("src").as("v")))
-    var pr = restart
+    val pr0 = restart
       .map(_.select(col("v"), col("r0").as("pr")))
       .getOrElse(verts.select(col("v"), lit(1.0).as("pr")))
       .localCheckpoint()
@@ -3368,17 +3365,12 @@ object GraphOps {
     // job costs more than the shuffle join it replaces) — round 1
     // broadcast(pr) unconditionally, an OOM at cluster-scale vertex
     // counts
-    val bcastState = pr.count() <= stateCap(spark) && parts > 8
-    var lastCp = pr // the latest materialized checkpoint
-    // iterative-loop execution discipline: AQE off + shuffle width
-    // pinned to parts (restored in the finally) — see connectedComponents
-    val conf = spark.conf
-    val aqeWas = conf.get("spark.sql.adaptive.enabled", "true")
-    val shufWas = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", loopAqe(conf))
-    conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-    try {
+    val bcastState = pr0.count() <= stateCap(spark) && parts > 8
+    loop(spark, parts) { lp =>
+      if (!symmetrized) lp.keep(sym)
+      lp.keep(outDeg); lp.keep(withDeg)
+      restart.foreach(lp.keep)
+      var pr = lp.latch("pr", pr0)
       for (i <- 1 to iters) {
         // lineage truncated every 3rd iteration (a checkpoint per
         // iteration costs more than the ≤3-deep plan it avoids); the
@@ -3410,24 +3402,10 @@ object GraphOps {
             .select(col("v"), (lit(0.15) +
               lit(0.85) * coalesce(col("sc"), lit(0.0))).as("pr"))
         })
-        if (i % 3 == 0 || i == iters) {
-          // the eager checkpoint has read the previous one, which no
-          // consumer references any more: free its blocks now
-          val cp = next.localCheckpoint()
-          SessionMemo.releaseLocalCheckpoint(lastCp)
-          lastCp = cp
-          pr = cp
-        } else pr = next
+        pr = if (i % 3 == 0 || i == iters) lp.latch("pr", next.localCheckpoint())
+          else next
       }
-    } finally {
-      if (!symmetrized) sym.unpersist()
-      outDeg.unpersist(); withDeg.unpersist()
-      restart.foreach(_.unpersist())
-    }
-    pr
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", aqeWas)
-      conf.set("spark.sql.shuffle.partitions", shufWas)
+      pr
     }
   }
 

@@ -22,7 +22,6 @@ object DevR14Probe {
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val stageMs = args.drop(2).headOption.map(_.toLong).getOrElse(150L)
     val warmDir = "/root/testdata/sf0.001"
-    val loopAqe = args.drop(3).headOption.contains("aqe") // A/B the loop pin
     // "coal": A/B size-first AQE coalescing (parallelismFirst=false)
     val coal = args.drop(3).headOption.contains("coal")
     val spark = SparkSession.builder()
@@ -34,7 +33,6 @@ object DevR14Probe {
         (!coal).toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config(operators.GraphOps.LoopAqeKey, loopAqe.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

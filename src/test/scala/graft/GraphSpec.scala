@@ -87,6 +87,61 @@ class GraphSpec extends SparkTestBase {
     assert(core1 == 4L)
   }
 
+  test("graph loops restore the loop conf and release their loop storage") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val loopConf = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    def confNow = loopConf.map(spark.conf.getOption)
+    // 0-1-…-6: seven CC rounds, so the initial and every-3rd-round
+    // label checkpoints all get superseded
+    val path = edgeDf((0L until 6L).map(i => i -> (i + 1)): _*)
+    // triangle {1,2,3} with the pendant chain 3-4-…-8: the 2-core peel
+    // runs five rounds, past kCore's every-3rd-round checkpoint
+    val tailed = edgeDf(Seq(1L -> 2L, 2L -> 3L, 1L -> 3L) ++
+      (3L until 8L).map(i => i -> (i + 1)): _*)
+    // K4 {1,2,3,4} plus triangle 4-5-6 and pendant 6-7: the 4-truss
+    // peel drops the non-K4 edges in round 0 and stops in round 1
+    val und = Seq(1L -> 2L, 1L -> 3L, 1L -> 4L, 2L -> 3L, 2L -> 4L,
+      3L -> 4L, 4L -> 5L, 4L -> 6L, 5L -> 6L, 6L -> 7L).toDF("a", "b")
+    // weighted 6-cycle with two chords, run on the distributed path
+    val wedges = Seq((1L, 2L, 4L), (2L, 3L, 1L), (3L, 4L, 6L), (4L, 5L, 2L),
+      (5L, 6L, 5L), (1L, 6L, 3L), (1L, 4L, 7L), (2L, 5L, 8L)).toDF("a", "b", "w")
+    def distributedMsf() = {
+      spark.conf.set(GraphOps.MstCollectMaxEdgesKey, "0")
+      try GraphOps.boruvkaMsf(wedges, numParts = 2)
+      finally spark.conf.unset(GraphOps.MstCollectMaxEdgesKey)
+    }
+    // (loop, call, checkpoints the returned frame scans). numParts = 2
+    // differs from the session width (4), so a leaked pin would show.
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame, Int)] = Seq(
+      ("connectedComponents", () => GraphOps.connectedComponents(path, numParts = 2), 1),
+      ("kCore", () => GraphOps.kCore(tailed, k = 2, numParts = 2), 1),
+      ("kTruss", () => GraphOps.kTruss(und, k = 4, numParts = 2), 1),
+      ("labelPropagation", () => GraphOps.labelPropagation(path, numParts = 2), 1),
+      ("pageRank", () => GraphOps.pageRank(tailed, 5, numParts = 2), 1),
+      ("boruvkaMsf", () => distributedMsf(), 1))
+    val faults = cases.flatMap { case (name, call, scans) =>
+      val conf = confNow
+      val before = sc.getPersistentRDDs.keySet
+      val out = call()
+      val confFault = Option.when(confNow != conf)(
+        s"$name left the loop conf at $confNow, found $conf")
+      assert(out.count() > 0, s"$name returned no rows")
+      val grown = sc.getPersistentRDDs.keySet -- before
+      grown.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist()))
+      confFault ++ Option.when(grown.size > scans)(s"$name left " +
+        s"${grown.size} persisted RDDs; its result scans $scans")
+    }
+    assert(faults.isEmpty, faults.mkString("; "))
+    // a loop that throws still hands the conf back
+    val conf = confNow
+    val e = intercept[IllegalStateException] {
+      GraphOps.connectedComponents(path, maxIters = 1, numParts = 2)
+    }
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
+    assert(confNow == conf, "a failed connectedComponents left the loop conf pinned")
+  }
+
   test("degree/two-hop/triangles agree with hand counts on a planted star graph") {
     val dir = tempDir()
     // orders 1..3 by customers 1..2; lineitems connect suppliers/parts

@@ -12,6 +12,42 @@ class Round15Spec extends SparkTestBase {
 
   test("sorted_pairs ≡ the flatten/transform/slice composition " +
       "(long and string arrays, randomized + edge sizes)") {
+    sortedPairsEquivalence()
+  }
+
+  test("sorted_triples ≡ the doubly-flattened composition " +
+      "(randomized + edge sizes)") {
+    sortedTriplesEquivalence()
+  }
+
+  test("sorted_intersect ≡ explode(array_intersect) on sorted long " +
+      "arrays (randomized, including duplicates and empties)") {
+    sortedIntersectEquivalence()
+  }
+
+  test("the three generator equivalences hold on the interpreted " +
+      "Generate path (whole-stage codegen off)") {
+    // GenerateExec without codegen pulls rows from the generators'
+    // eval iterators, which reuse one row object per iterator
+    val key = "spark.sql.codegen.wholeStage"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
+      import spark.implicits._
+      graft.functions.SortedCombinations.register(spark)
+      val plan = Seq(Tuple1(Seq(1L, 2L, 3L))).toDF("ds")
+        .select(expr("sorted_pairs(ds)")).queryExecution.executedPlan
+      assert(plan.exists(_.isInstanceOf[GenerateExec]) &&
+        !plan.exists(_.isInstanceOf[WholeStageCodegenExec]),
+        s"expected an interpreted GenerateExec:\n$plan")
+      sortedPairsEquivalence()
+      sortedTriplesEquivalence()
+      sortedIntersectEquivalence()
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def sortedPairsEquivalence(): Unit = {
     graft.functions.SortedCombinations.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(42)
@@ -49,8 +85,7 @@ class Round15Spec extends SparkTestBase {
     assert(newS == oldS, s"string pairs differ: ${newS.size} vs ${oldS.size}")
   }
 
-  test("sorted_triples ≡ the doubly-flattened composition " +
-      "(randomized + edge sizes)") {
+  private def sortedTriplesEquivalence(): Unit = {
     graft.functions.SortedCombinations.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7)
@@ -73,8 +108,7 @@ class Round15Spec extends SparkTestBase {
       arrs.map(a => a.size * (a.size - 1) * (a.size - 2) / 6).sum)
   }
 
-  test("sorted_intersect ≡ explode(array_intersect) on sorted long " +
-      "arrays (randomized, including duplicates and empties)") {
+  private def sortedIntersectEquivalence(): Unit = {
     graft.functions.SortedCombinations.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(99)

@@ -332,9 +332,10 @@ class Round9Spec extends SparkTestBase {
     val sc = spark.sparkContext
     // (key, memo label, loop checkpoints the key persists that no memo
     // owns, so the clear leaves them: dedup_embedding_cluster's
-    // connected-components labels, the refresh's final PageRank frame)
+    // returned connected-components label frame, the refresh's final
+    // PageRank frame)
     val cases = Seq(
-      ("dedup_embedding_cluster", "embSig", 2),
+      ("dedup_embedding_cluster", "embSig", 1),
       ("vec_pca_power", "gram", 0),
       ("pipeline_patent_refresh", "patentMerged", 1))
     for ((key, label, kept) <- cases) {
