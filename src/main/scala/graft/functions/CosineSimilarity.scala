@@ -87,6 +87,5 @@ object CosineSimilarity {
   /** Register `cosine_sim(a, b)` in the session's function registry so
     * queries can use it via expr("cosine_sim(...)"). Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
+    registerOnce(spark, "cosine_sim")(exprs => CosineSimilarity(exprs(0), exprs(1)))
 }

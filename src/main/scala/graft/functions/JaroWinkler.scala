@@ -100,6 +100,5 @@ object JaroWinkler {
   /** Register `jaro_winkler(a, b)` in the session's function registry.
     * Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinklerExpr(exprs(0), exprs(1)), "built-in")
+    registerOnce(spark, "jaro_winkler")(exprs => JaroWinklerExpr(exprs(0), exprs(1)))
 }

@@ -74,6 +74,5 @@ object MortonInterleave {
   /** Register `morton2(a, b)` in the session's function registry.
     * Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "morton2", exprs => MortonInterleave(exprs(0), exprs(1)), "built-in")
+    registerOnce(spark, "morton2")(exprs => MortonInterleave(exprs(0), exprs(1)))
 }

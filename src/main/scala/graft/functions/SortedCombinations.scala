@@ -280,12 +280,9 @@ object SortedCombinations {
   /** Register `sorted_pairs(arr)` / `sorted_triples(arr)` in the
     * session's function registry. Idempotent. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_pairs", exprs => SortedPairs(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_triples", exprs => SortedTriples(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect", exprs => SortedIntersect(exprs(0), exprs(1)),
-      "built-in")
+    registerOnce(spark, "sorted_pairs")(exprs => SortedPairs(exprs(0)))
+    registerOnce(spark, "sorted_triples")(exprs => SortedTriples(exprs(0)))
+    registerOnce(spark, "sorted_intersect")(
+      exprs => SortedIntersect(exprs(0), exprs(1)))
   }
 }

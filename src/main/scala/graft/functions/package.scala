@@ -1,0 +1,18 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
+
+package object functions {
+  /** install `name` in the session's function registry unless the
+    * session already has it. Queries call their functions' `register`
+    * on every use, and replacing a registered function logs a WARN
+    * each time. */
+  private[graft] def registerOnce(spark: SparkSession, name: String)(
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
+}

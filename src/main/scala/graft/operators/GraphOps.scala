@@ -245,25 +245,8 @@ object GraphOps {
       dist
     }
 
-  /** partition count for the iterative graph state, sized to the edge
-    * source's bytes (one partition per ~2 MB of lineitem parquet,
-    * clamped to [1, defaultParallelism]). Read from file metadata — no
-    * Spark job. Rationale: every CC/PageRank iteration schedules a
-    * task per partition per stage, so a tiny local graph on the
-    * global 32-partition default pays 32× the scheduling for zero
-    * parallelism gain (and on a contended box that overhead, not
-    * compute, dominates the bench); at cluster scale the same rule
-    * reaches defaultParallelism and the loops fan out fully.
-    *
-    * Sized from the footer ROW COUNT, not file bytes (r4b): the
-    * driver regenerated the testdata with a different parquet writer
-    * whose better compression halved the file size at identical
-    * content — and the old bytes/2MB rule silently cut the sf0.1
-    * graph loops from ~15 partitions to 5, which DevParts measured as
-    * a 2-10× pageRank regression. Row count is invariant to the
-    * writer; 40k source rows per partition puts sf0.1 at 15 — the
-    * measured sweet spot (parts=10..16 ≈ 6.7 s, parts=5 up to 65 s on
-    * a loaded box). */
+  /** partition count for the iterative graph state over the lineitem
+    * edge source; see [[loopWidth]] for the rule. */
   private[operators] def graphParts(s: SparkSession, d: String): Int =
     partsFor(s, d, "lineitem")
 
@@ -296,8 +279,30 @@ object GraphOps {
     })
 
   private[operators] def partsFor(s: SparkSession, d: String, table: String): Int =
-    math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
-      tableRows(s, d, table) / 40000L)).toInt
+    loopWidth(tableRows(s, d, table), s.sparkContext.defaultParallelism)
+
+  /** partition count for an iterative graph loop over a source table
+    * of `rows` rows on `cores` task slots: one partition per 15,000
+    * source rows, clamped to [1, cores]. Every CC/PageRank round
+    * schedules a task per partition per stage, so a tiny graph on a
+    * wide default pays the scheduling for no parallelism; a graph big
+    * enough to keep each task busy gets one task per core. Sized from
+    * the parquet footer row count (no Spark job, invariant to the
+    * writer's compression: the r4b bytes rule silently fell from ~15
+    * to 5 partitions at sf0.1 when the testdata writer changed).
+    *
+    * 15,000 rows puts sf0.001 at 1, sf0.01 (60,000 lineitem rows) at 4
+    * and sf0.1 at min(40, cores). The old 40,000 gave sf0.01 ONE
+    * partition on any box, so each patent-refresh PageRank round was a
+    * single task over 117,032 edge rows. Measured on a 4-core box with
+    * the perfbench patent_refresh workload, together with pageRank's
+    * per-vertex rank share: executor slot utilization 0.20 → 0.31 and
+    * build time 10.6 → 5.8 s per pass (traced, seed 7); median pass
+    * 9.0 → 5.3 s over ten untraced pairs. Trade-off: a 32-core box now
+    * runs sf0.1 at 32 partitions instead of 15, which the r4b DevParts
+    * sweep measured as slower than 10–16 there. */
+  private[graft] def loopWidth(rows: Long, cores: Int): Int =
+    math.max(1L, math.min(cores.toLong, rows / 15000L)).toInt
 
   /** row caps for choosing an explicit broadcast over a co-partitioned
     * shuffle join. AQE cannot make this call here — the join inputs are
@@ -2870,6 +2875,15 @@ object GraphOps {
         col("base_lbl"))
   }
 
+  /** a loop's own symmetrized copy of `(src, dst)` edges: both
+    * orientations of every edge, each pair once, cached and
+    * hash-partitioned on src into `p` partitions. Repartition first:
+    * hash(src) already clusters every (src, dst) pair, so the distinct
+    * aggregates in place and the union is exchanged only once. */
+  private[graft] def symmetrize(edgeDf: DataFrame, p: Int): DataFrame =
+    edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(p, col("src")).distinct().cache()
+
   def connectedComponents(edgeDf: DataFrame, maxIters: Int = 50,
       symmetrized: Boolean = false, numParts: Int = 0): DataFrame = {
     val spark = edgeDf.sparkSession
@@ -2889,10 +2903,7 @@ object GraphOps {
     // (AQE on, full shuffle width): they scan/join the raw inputs and
     // want full parallelism. Only the iteration loop runs in the
     // [[loop]] scope.
-    val sym =
-      if (symmetrized) edgeDf
-      else edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().repartition(p, col("src")).cache()
+    val sym = if (symmetrized) edgeDf else symmetrize(edgeDf, p)
     val labels0 = sym.select(col("src").as("v")).distinct()
       .withColumn("lbl", col("v")).repartition(p, col("v")).localCheckpoint()
     // join strategy by MEASURED vertex count (see BroadcastStateMaxRows
@@ -2906,7 +2917,9 @@ object GraphOps {
     // iteration, and on a loaded box per-job latency — not compute —
     // dominates an iterative query (round-2 driver bench post-mortem),
     // so the shuffle join wins until the edge side is genuinely wide.
-    val bcastState = labels0.count() <= stateCap(spark) && p > 8
+    // The width is tested first: labels0 is already materialized, so the
+    // count is an action (two jobs under AQE) that only feeds this gate.
+    val bcastState = p > 8 && labels0.count() <= stateCap(spark)
     loop(spark, p) { lp =>
       if (!symmetrized) lp.keep(sym)
       var labels = lp.latch("labels", labels0)
@@ -3176,10 +3189,7 @@ object GraphOps {
     val spark = edgeDf.sparkSession
     val p = if (numParts > 0) numParts
       else spark.sessionState.conf.numShufflePartitions
-    val sym0 =
-      if (symmetrized) edgeDf
-      else edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().repartition(p, col("src")).cache()
+    val sym0 = if (symmetrized) edgeDf else symmetrize(edgeDf, p)
     // materialize the edge derivation under the SESSION conf (AQE on,
     // full width) before the scope — same split as CC/PageRank: only
     // the peel loop runs at the pinned width
@@ -3262,10 +3272,7 @@ object GraphOps {
     val spark = edgeDf.sparkSession
     val p = if (numParts > 0) numParts
       else spark.sessionState.conf.numShufflePartitions
-    val sym0 =
-      if (symmetrized) edgeDf
-      else edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().repartition(p, col("src")).cache()
+    val sym0 = if (symmetrized) edgeDf else symmetrize(edgeDf, p)
     sym0.count() // materialize under the session conf (AQE, full width)
     loop(spark, p) { lp =>
       if (!symmetrized) lp.keep(sym0)
@@ -3312,21 +3319,17 @@ object GraphOps {
     // edge derivation + rank init run under the session conf (AQE on,
     // full width) — they scan the raw inputs and want parallelism; only
     // the iteration loop below runs in the [[loop]] scope, as in
-    // connectedComponents
-    val sym =
-      if (symmetrized) edgeDf
-      else edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().repartition(parts, col("src")).cache()
+    // connectedComponents. The edge set is cached pre-partitioned on
+    // src and never moves again: each round joins it with the
+    // src-co-partitioned state, so only the per-vertex vector shuffles.
+    val sym = if (symmetrized) edgeDf else symmetrize(edgeDf, parts)
     // odeg = out-degree (uniform) or Σ outgoing weight (weighted) —
     // the contribution divisor either way
     val outDeg = (if (weighted)
         sym.groupBy(col("src")).agg(sum(col("w")).as("odeg"))
       else sym.groupBy(col("src")).agg(count(lit(1)).as("odeg")))
-      .repartition(parts, col("src")).cache()
-    // degree-annotated edges, cached pre-partitioned on src (sym is
-    // src-partitioned, so the join preserves that partitioning): each
-    // iteration reuses it and only the rank vector moves
-    val withDeg = sym.join(outDeg, Seq("src")).cache()
+      .select(col("src").as("v"), col("odeg"))
+      .repartition(parts, col("v")).cache()
     // PERSONALIZED variant (seeds = Some(one-column seed-vertex DF)):
     // the restart mass concentrates on the seed set — x ← 0.15·e_S +
     // 0.85·AᵀD⁻¹x from x₀ = e_S — so rank flows outward from the
@@ -3336,27 +3339,25 @@ object GraphOps {
     // place of the uniform 0.15; with seeds = None the arithmetic
     // below reduces exactly to the standard 0.15 + 0.85·sc.
     val restart = seeds.map { sd =>
-      outDeg.select(col("src").as("v"))
-        .join(broadcast(sd.toDF("sv")), col("v") === col("sv"), "left")
-        .select(col("v"), when(col("sv").isNotNull, lit(1.0))
+      outDeg.join(broadcast(sd.toDF("sv")), col("v") === col("sv"), "left")
+        .select(col("v"), col("odeg"), when(col("sv").isNotNull, lit(1.0))
           .otherwise(lit(0.0)).as("r0"))
         .repartition(parts, col("v")).cache()
     }
     // CONSTANT frame relation for the per-round left join (r14, guide
     // §2.4/§5): the vertex set is round-invariant (= outDeg's keys), so
-    // framing `contrib` against this cached projection instead of the
-    // previous round's `pr` leaves the state single-referenced per
-    // round — the per-round `.cache()` (and its storage churn: measured
-    // 300–600 ms of GC per loop stage at sf0.1) goes away, and the
-    // lineage between the every-3rd-round checkpoints stays a LINEAR
-    // chain instead of doubling per round. Arithmetic is unchanged:
-    // pr's vertex set ≡ verts every round, and the personalized path
-    // already framed against the cached restart vector.
-    val verts = restart.map(_.select(col("v")))
-      .getOrElse(outDeg.select(col("src").as("v")))
-    val pr0 = restart
-      .map(_.select(col("v"), col("r0").as("pr")))
-      .getOrElse(verts.select(col("v"), lit(1.0).as("pr")))
+    // framing `contrib` against this cached (v, odeg[, r0]) relation
+    // instead of the previous round's state leaves the state
+    // single-referenced per round — no per-round `.cache()` (measured
+    // 300–600 ms of GC per loop stage at sf0.1), and the lineage
+    // between the every-3rd-round checkpoints stays a LINEAR chain
+    // instead of doubling per round. The frame also carries odeg into
+    // every round's state (v, odeg, pr), so no round joins a degree
+    // table.
+    val frame = restart.getOrElse(outDeg)
+    val pr0 = frame
+      .select(col("v"), col("odeg"),
+        (if (seeds.isDefined) col("r0") else lit(1.0)).as("pr"))
       .localCheckpoint()
     // join strategy by MEASURED vertex count, as in connectedComponents:
     // broadcast the rank vector while it fits AND the edge side spans
@@ -3364,48 +3365,55 @@ object GraphOps {
     // (under a handful of partitions the per-iteration broadcast build
     // job costs more than the shuffle join it replaces) — round 1
     // broadcast(pr) unconditionally, an OOM at cluster-scale vertex
-    // counts
-    val bcastState = pr0.count() <= stateCap(spark) && parts > 8
+    // counts. The width is tested first: the count only feeds this gate.
+    val bcastState = parts > 8 && pr0.count() <= stateCap(spark)
+    val dec = DecimalType(28, 12)
     loop(spark, parts) { lp =>
       if (!symmetrized) lp.keep(sym)
-      lp.keep(outDeg); lp.keep(withDeg)
+      lp.keep(outDeg)
       restart.foreach(lp.keep)
       var pr = lp.latch("pr", pr0)
       for (i <- 1 to iters) {
         // lineage truncated every 3rd iteration (a checkpoint per
         // iteration costs more than the ≤3-deep plan it avoids); the
-        // checkpoints are the ONLY per-loop jobs — three iterations of
-        // single-digit-task stages per job (broadcast builds pipeline
-        // inside them)
-        val p = if (bcastState) broadcast(pr) else pr
+        // checkpoints are the only per-round jobs: each one runs up to
+        // three rounds' stages (broadcast builds pipeline inside it)
+        //
         // contribution sum as exact DECIMAL(28,12) (Stable.dsum
         // discipline at 12 dp): order-independent across partial/final
         // aggregation AND engines, which is what lets graph_pagerank
         // carry a DuckDB oracle (prUnrolledSql). The quantization is
         // ≤5e-13 per contribution — invisible at the 4 dp output.
+        // Uniform and personalized: a vertex sends the same share
+        // CAST(pr/odeg) along every out-edge, so it is cast ONCE per
+        // vertex on the state and joined to the edges (the superstep
+        // shape: compute the message per vertex, send it per edge) —
+        // the same decimal per edge as casting on each edge row.
+        // Weighted: the share pr·w/odeg is cast per edge, because it
+        // varies with w and factoring pr/odeg out of it would change
+        // the double rounding.
+        val share = if (weighted) pr
+          else pr.select(col("v"), (col("pr") / col("odeg")).cast(dec).as("c"))
+        val sent = sym.join(if (bcastState) broadcast(share) else share,
+          col("src") === col("v"))
         // No repartition after the aggregate (r14, guide §2.4): the
         // loop conf pins spark.sql.shuffle.partitions = parts, so the
         // groupBy's own exchange already lands hash(v2, parts) — the
         // old explicit repartition was a second, redundant exchange of
         // the state vector every round.
-        val contrib = withDeg.join(p, withDeg("src") === p("v"))
+        val contrib = sent
           .select(col("dst").as("v2"),
-            (if (weighted) col("pr") * col("w") / col("odeg")
-             else col("pr") / col("odeg"))
-              .cast(DecimalType(28, 12)).as("c"))
+            if (weighted) (col("pr") * col("w") / col("odeg")).cast(dec).as("c")
+            else col("c"))
           .groupBy(col("v2")).agg(sum(col("c")).cast("double").as("sc"))
-        val next = (restart match {
-          case Some(rb) => rb.join(contrib, rb("v") === col("v2"), "left")
-            .select(col("v"), (lit(0.15) * col("r0") +
+        val next = frame.join(contrib, col("v") === col("v2"), "left")
+          .select(col("v"), col("odeg"),
+            ((if (seeds.isDefined) lit(0.15) * col("r0") else lit(0.15)) +
               lit(0.85) * coalesce(col("sc"), lit(0.0))).as("pr"))
-          case None => verts.join(contrib, verts("v") === col("v2"), "left")
-            .select(col("v"), (lit(0.15) +
-              lit(0.85) * coalesce(col("sc"), lit(0.0))).as("pr"))
-        })
         pr = if (i % 3 == 0 || i == iters) lp.latch("pr", next.localCheckpoint())
           else next
       }
-      pr
+      pr.select(col("v"), col("pr"))
     }
   }
 

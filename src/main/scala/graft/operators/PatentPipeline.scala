@@ -44,8 +44,9 @@ import org.apache.spark.sql.expressions.Window
   * aggregate is one map-side-combined shuffle on the order key; the
   * merge is one shuffle on the patent key (at 100 TB both sides would
   * be bucketed on it — sources/Bucketed.scala — making it
-  * exchange-free); PageRank shuffles vertex state only, against a
-  * cached degree-annotated edge relation (see pageRank's scaladoc);
+  * exchange-free); PageRank shuffles vertex state only: each round
+  * casts every vertex's rank share once and joins it to a cached
+  * src-partitioned edge relation (see pageRank's comments);
   * the serve window is one shuffle on the 5-value class key after
   * rank — every stage's exchange carries keys and fixed-width state,
   * never text or XML.

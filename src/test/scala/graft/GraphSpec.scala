@@ -73,6 +73,101 @@ class GraphSpec extends SparkTestBase {
     } finally spark.conf.unset(GraphOps.BroadcastStateMaxRowsKey)
   }
 
+  /** PageRank with the per-EDGE share arithmetic: the degree-annotated
+    * edge join and a cast of pr/odeg (or pr·w/odeg) on every edge row.
+    * Uncached and without checkpoints; any partitioning gives the same
+    * doubles, since the decimal sums are exact. */
+  private def perEdgePageRank(edges: org.apache.spark.sql.DataFrame,
+      iters: Int, seeds: Option[Seq[Long]], weighted: Boolean) = {
+    val dec = org.apache.spark.sql.types.DecimalType(28, 12)
+    val sym = if (weighted) edges
+      else edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+    val outDeg = sym.groupBy(col("src")).agg(
+      (if (weighted) sum(col("w")) else count(lit(1))).as("odeg"))
+    val withDeg = sym.join(outDeg, Seq("src"))
+    val verts = outDeg.select(col("src").as("v"))
+    val restart = seeds.map(ss => verts.select(col("v"),
+      when(col("v").isin(ss: _*), lit(1.0)).otherwise(lit(0.0)).as("r0")))
+    var pr = restart.fold(verts.select(col("v"), lit(1.0).as("pr")))(
+      _.select(col("v"), col("r0").as("pr")))
+    for (_ <- 1 to iters) {
+      val contrib = withDeg.join(pr, withDeg("src") === pr("v"))
+        .select(col("dst").as("v2"),
+          (if (weighted) col("pr") * col("w") / col("odeg")
+           else col("pr") / col("odeg")).cast(dec).as("c"))
+        .groupBy(col("v2")).agg(sum(col("c")).cast("double").as("sc"))
+      pr = restart.fold(verts.join(contrib, col("v") === col("v2"), "left")
+          .select(col("v"), (lit(0.15) +
+            lit(0.85) * coalesce(col("sc"), lit(0.0))).as("pr")))(rb =>
+        rb.join(contrib, col("v") === col("v2"), "left")
+          .select(col("v"), (lit(0.15) * col("r0") +
+            lit(0.85) * coalesce(col("sc"), lit(0.0))).as("pr")))
+    }
+    pr.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+  }
+
+  test("pageRank's per-vertex rank share equals the per-edge arithmetic " +
+      "exactly (uniform, personalized, weighted; 1 and 4 partitions)") {
+    import spark.implicits._
+    // hub 1 with five leaves, a triangle hanging off leaf 6, and a
+    // chain off the triangle: out-degrees 1, 2, 3 and 6, and ranks
+    // whose shares pr/odeg do not terminate in binary
+    val pairs = (2L to 6L).map(1L -> _) ++
+      Seq(6L -> 7L, 7L -> 8L, 6L -> 8L, 8L -> 9L, 9L -> 10L)
+    val g = edgeDf(pairs: _*)
+    val weights = pairs.map { case (a, b) => (a, b, 1 + (a * 7 + b * 3) % 5) }
+    val wsym = (weights ++ weights.map { case (a, b, w) => (b, a, w) })
+      .toDF("src", "dst", "w")
+    val seeds = Seq(3L, 9L)
+    for (parts <- Seq(1, 4)) {
+      val uni = GraphOps.pageRank(g, 7, numParts = parts)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(uni == perEdgePageRank(g, 7, None, weighted = false),
+        s"uniform, $parts partitions")
+      val ppr = GraphOps.pageRank(g, 7, numParts = parts,
+          seeds = Some(seeds.toDF("v")))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(ppr == perEdgePageRank(g, 7, Some(seeds), weighted = false),
+        s"personalized, $parts partitions")
+      val wpr = GraphOps.pageRank(wsym, 7, symmetrized = true,
+          numParts = parts, weighted = true)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(wpr == perEdgePageRank(wsym, 7, None, weighted = true),
+        s"weighted, $parts partitions")
+    }
+  }
+
+  test("loopWidth: one partition per 15,000 source rows, clamped to " +
+      "[1, cores]") {
+    val table = Seq(
+      (6000L, 4, 1),     // sf0.001 lineitem
+      (60000L, 4, 4),    // sf0.01 lineitem on 4 cores
+      (60000L, 2, 2),
+      (600000L, 8, 8),   // sf0.1 lineitem on 8 cores
+      (600000L, 64, 40),
+      (0L, 4, 1))
+    for ((rows, cores, parts) <- table)
+      assert(GraphOps.loopWidth(rows, cores) == parts, s"$rows rows, $cores cores")
+  }
+
+  test("the loops' symmetrized edge copy: one exchange, src-partitioned, " +
+      "each orientation once") {
+    val g = edgeDf(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 4L, 3L -> 4L, 5L -> 5L)
+    val sym = GraphOps.symmetrize(g, 3)
+    try {
+      val plan = sym.queryExecution.executedPlan.toString
+      val exchanges = plan.linesIterator.count(_.contains("Exchange "))
+      assert(exchanges == 1, s"expected one exchange below the cache:\n$plan")
+      assert("Exchange hashpartitioning\\(src#\\d+L?, 3\\)".r
+        .findFirstIn(plan).isDefined, s"not hash(src, 3)-partitioned:\n$plan")
+      val rows = sym.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      assert(rows.sorted == Seq(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 2L,
+        3L -> 4L, 4L -> 3L, 5L -> 5L))
+      assert(sym.rdd.getNumPartitions == 3)
+    } finally sym.unpersist()
+  }
+
   test("kCore: planted clique survives the peel, pendant chain does not") {
     // triangle {1,2,3} with pendant chain 3-4-5: the 2-core is exactly
     // the triangle (each vertex in-core degree 2); chain peels away

@@ -47,6 +47,27 @@ class Round15Spec extends SparkTestBase {
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("function register calls install each function once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    val registers: Seq[(Seq[String], () => Unit)] = Seq(
+      Seq("sorted_pairs", "sorted_triples", "sorted_intersect") ->
+        (() => graft.functions.SortedCombinations.register(spark)),
+      Seq("jaro_winkler") -> (() => graft.functions.JaroWinkler.register(spark)),
+      Seq("cosine_sim") -> (() => graft.functions.CosineSimilarity.register(spark)),
+      Seq("morton2") -> (() => graft.functions.MortonInterleave.register(spark)))
+    for ((names, register) <- registers) {
+      register()
+      def infos = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+      val first = infos
+      assert(first.forall(_.isDefined), s"$names not registered")
+      register()
+      // a replace would register a fresh ExpressionInfo
+      assert(infos.zip(first).forall { case (b, a) => b.get eq a.get },
+        s"a second register replaced $names")
+    }
+  }
+
   private def sortedPairsEquivalence(): Unit = {
     graft.functions.SortedCombinations.register(spark)
     import spark.implicits._
