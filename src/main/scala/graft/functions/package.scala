@@ -10,9 +10,12 @@ package object functions {
     * on every use, and replacing a registered function logs a WARN
     * each time. */
   private[graft] def registerOnce(spark: SparkSession, name: String)(
-      builder: Seq[Expression] => Expression): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(name)))
-      registry.createOrReplaceTempFunction(name, builder, "built-in")
-  }
+      builder: Seq[Expression] => Expression): Unit =
+    if (!registered(spark, name))
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** whether the session's function registry already has `name` */
+  private[graft] def registered(spark: SparkSession, name: String): Boolean =
+    spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
 }

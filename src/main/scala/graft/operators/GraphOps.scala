@@ -3,6 +3,8 @@ package graft.operators
 import graft._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** §2.10 — graph operators over the citation-graph stand-in.
@@ -383,9 +385,14 @@ object GraphOps {
     * warm min at sf0.1, OPTIMIZATION_r14.md). On exit, a throw
     * included, both keys get back the values the scope found, so a
     * nested loop (CC inside mergeCcDelta or a memo build) hands back
-    * its enclosing loop's pin, not the session default. Work that
-    * scans raw inputs (edge derivation, state init) runs BEFORE the
-    * scope, under the session conf and its full parallelism.
+    * its enclosing loop's pin, not the session default. CC, kCore and
+    * LPA derive their edge copy and initial state BEFORE the scope,
+    * under the session conf (AQE on, full width). pageRank builds its
+    * round-invariant inputs (edge copy, degree frame) INSIDE it, as
+    * latched checkpoints: under AQE each took several jobs, and the
+    * rounds re-planned the caller's whole edge lineage through the
+    * cached frames; in the scope each is one job and the rounds plan
+    * over leaves.
     *
     * Storage: everything the body registers with its [[Loop]] is
     * released by the scope; on exit every cache is unpersisted and
@@ -408,15 +415,17 @@ object GraphOps {
   }
 
   /** the storage a [[loop]] body hands to its scope:
-    *  - `keep(df)`: a cached frame the whole loop reads (edge sets,
-    *    degree tables), unpersisted on exit.
+    *  - `keep(df)`: a cached frame the whole loop reads (an edge
+    *    set), unpersisted on exit.
     *  - `link(df)`: a cached link of the state lineage, unpersisted
     *    once a checkpoint latched after it has materialized — that
     *    checkpoint truncated the chain.
     *  - `latch(track, cp)`: the newest localCheckpoint of the loop
-    *    state named `track`. Older checkpoints of the track are freed
-    *    once it has materialized, never before: checkpoint blocks
-    *    cannot be recomputed (the rule pageRank introduced).
+    *    state named `track` (or of a round-invariant input, such as
+    *    pageRank's `sym` and `deg`, latched once). Older checkpoints
+    *    of the track are freed once it has materialized, never
+    *    before: checkpoint blocks cannot be recomputed (the rule
+    *    pageRank introduced).
     * An eager checkpoint is materialized when latched; a lazy one by
     * the next `count`, the loop-control action, which must read every
     * lazy checkpoint latched since the previous count. */
@@ -2876,13 +2885,14 @@ object GraphOps {
   }
 
   /** a loop's own symmetrized copy of `(src, dst)` edges: both
-    * orientations of every edge, each pair once, cached and
-    * hash-partitioned on src into `p` partitions. Repartition first:
-    * hash(src) already clusters every (src, dst) pair, so the distinct
+    * orientations of every edge, each pair once, hash-partitioned on
+    * src into `p` partitions; the caller persists it (a cache, or
+    * pageRank's latched checkpoint). Repartition first: hash(src)
+    * already clusters every (src, dst) pair, so the distinct
     * aggregates in place and the union is exchanged only once. */
   private[graft] def symmetrize(edgeDf: DataFrame, p: Int): DataFrame =
     edgeDf.union(edgeDf.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(p, col("src")).distinct().cache()
+      .repartition(p, col("src")).distinct()
 
   def connectedComponents(edgeDf: DataFrame, maxIters: Int = 50,
       symmetrized: Boolean = false, numParts: Int = 0): DataFrame = {
@@ -2903,7 +2913,7 @@ object GraphOps {
     // (AQE on, full shuffle width): they scan/join the raw inputs and
     // want full parallelism. Only the iteration loop runs in the
     // [[loop]] scope.
-    val sym = if (symmetrized) edgeDf else symmetrize(edgeDf, p)
+    val sym = if (symmetrized) edgeDf else symmetrize(edgeDf, p).cache()
     val labels0 = sym.select(col("src").as("v")).distinct()
       .withColumn("lbl", col("v")).repartition(p, col("v")).localCheckpoint()
     // join strategy by MEASURED vertex count (see BroadcastStateMaxRows
@@ -3189,10 +3199,10 @@ object GraphOps {
     val spark = edgeDf.sparkSession
     val p = if (numParts > 0) numParts
       else spark.sessionState.conf.numShufflePartitions
-    val sym0 = if (symmetrized) edgeDf else symmetrize(edgeDf, p)
+    val sym0 = if (symmetrized) edgeDf else symmetrize(edgeDf, p).cache()
     // materialize the edge derivation under the SESSION conf (AQE on,
-    // full width) before the scope — same split as CC/PageRank: only
-    // the peel loop runs at the pinned width
+    // full width) before the scope — same split as CC: only the peel
+    // loop runs at the pinned width
     sym0.count()
     loop(spark, p) { lp =>
       if (!symmetrized) lp.keep(sym0)
@@ -3238,11 +3248,6 @@ object GraphOps {
     }
   }
 
-  /** PageRank (damping 0.85, unnormalized GraphX-style: pr = 0.15 +
-    * 0.85·Σ pr_in/outdeg) on the symmetrized graph — symmetrization
-    * removes dangling vertices by construction, so total mass is
-    * conserved and scores are comparable to GraphX staticPageRank
-    * (property-tested in GraphSpec). Public library API. */
   /** Deterministic synchronous label propagation: every vertex starts
     * as its own label; each round every vertex adopts the most
     * frequent label among its neighbors, ties broken toward the
@@ -3272,7 +3277,7 @@ object GraphOps {
     val spark = edgeDf.sparkSession
     val p = if (numParts > 0) numParts
       else spark.sessionState.conf.numShufflePartitions
-    val sym0 = if (symmetrized) edgeDf else symmetrize(edgeDf, p)
+    val sym0 = if (symmetrized) edgeDf else symmetrize(edgeDf, p).cache()
     sym0.count() // materialize under the session conf (AQE, full width)
     loop(spark, p) { lp =>
       if (!symmetrized) lp.keep(sym0)
@@ -3300,6 +3305,11 @@ object GraphOps {
     }
   }
 
+  /** PageRank (damping 0.85, unnormalized GraphX-style: pr = 0.15 +
+    * 0.85·Σ pr_in/outdeg) on the symmetrized graph — symmetrization
+    * removes dangling vertices by construction, so total mass is
+    * conserved and scores are comparable to GraphX staticPageRank
+    * (property-tested in GraphSpec). Public library API. */
   def pageRank(edgeDf: DataFrame, iters: Int,
       symmetrized: Boolean = false, numParts: Int = 0,
       seeds: Option[DataFrame] = None,
@@ -3316,68 +3326,80 @@ object GraphOps {
       "weighted pageRank expects pre-symmetrized (src, dst, w) edges")
     val parts = if (numParts > 0) numParts
       else spark.sessionState.conf.numShufflePartitions
-    // edge derivation + rank init run under the session conf (AQE on,
-    // full width) — they scan the raw inputs and want parallelism; only
-    // the iteration loop below runs in the [[loop]] scope, as in
-    // connectedComponents. The edge set is cached pre-partitioned on
-    // src and never moves again: each round joins it with the
-    // src-co-partitioned state, so only the per-vertex vector shuffles.
-    val sym = if (symmetrized) edgeDf else symmetrize(edgeDf, parts)
-    // odeg = out-degree (uniform) or Σ outgoing weight (weighted) —
-    // the contribution divisor either way
-    val outDeg = (if (weighted)
-        sym.groupBy(col("src")).agg(sum(col("w")).as("odeg"))
-      else sym.groupBy(col("src")).agg(count(lit(1)).as("odeg")))
-      .select(col("src").as("v"), col("odeg"))
-      .repartition(parts, col("v")).cache()
-    // PERSONALIZED variant (seeds = Some(one-column seed-vertex DF)):
-    // the restart mass concentrates on the seed set — x ← 0.15·e_S +
-    // 0.85·AᵀD⁻¹x from x₀ = e_S — so rank flows outward from the
-    // seeds (similarity/recommendation PageRank). The restart vector
-    // is materialized ONCE (seed flag via a broadcast left join,
-    // pre-partitioned on the state key) and joined each round in
-    // place of the uniform 0.15; with seeds = None the arithmetic
-    // below reduces exactly to the standard 0.15 + 0.85·sc.
-    val restart = seeds.map { sd =>
-      outDeg.join(broadcast(sd.toDF("sv")), col("v") === col("sv"), "left")
-        .select(col("v"), col("odeg"), when(col("sv").isNotNull, lit(1.0))
-          .otherwise(lit(0.0)).as("r0"))
-        .repartition(parts, col("v")).cache()
-    }
-    // CONSTANT frame relation for the per-round left join (r14, guide
-    // §2.4/§5): the vertex set is round-invariant (= outDeg's keys), so
-    // framing `contrib` against this cached (v, odeg[, r0]) relation
-    // instead of the previous round's state leaves the state
-    // single-referenced per round — no per-round `.cache()` (measured
-    // 300–600 ms of GC per loop stage at sf0.1), and the lineage
-    // between the every-3rd-round checkpoints stays a LINEAR chain
-    // instead of doubling per round. The frame also carries odeg into
-    // every round's state (v, odeg, pr), so no round joins a degree
-    // table.
-    val frame = restart.getOrElse(outDeg)
-    val pr0 = frame
-      .select(col("v"), col("odeg"),
-        (if (seeds.isDefined) col("r0") else lit(1.0)).as("pr"))
-      .localCheckpoint()
-    // join strategy by MEASURED vertex count, as in connectedComponents:
-    // broadcast the rank vector while it fits AND the edge side spans
-    // enough partitions for the broadcast to save real exchange work
-    // (under a handful of partitions the per-iteration broadcast build
-    // job costs more than the shuffle join it replaces) — round 1
-    // broadcast(pr) unconditionally, an OOM at cluster-scale vertex
-    // counts. The width is tested first: the count only feeds this gate.
-    val bcastState = parts > 8 && pr0.count() <= stateCap(spark)
     val dec = DecimalType(28, 12)
     loop(spark, parts) { lp =>
-      if (!symmetrized) lp.keep(sym)
-      lp.keep(outDeg)
-      restart.foreach(lp.keep)
-      var pr = lp.latch("pr", pr0)
+      // The round-invariant inputs are built inside the scope and
+      // latched as eager localCheckpoints: the loop's own symmetrized
+      // edge set (hash-partitioned on src, it never moves again) and
+      // the degree frame read from it without an exchange. Each is
+      // one job, and every round's plan scans these leaves instead of
+      // re-planning the caller's whole edge lineage.
+      val sym = if (symmetrized) edgeDf
+        else lp.latch("sym", symmetrize(edgeDf, parts).localCheckpoint())
+      // odeg = out-degree (uniform) or Σ outgoing weight (weighted) —
+      // the contribution divisor either way
+      val outDeg = (if (weighted)
+          sym.groupBy(col("src")).agg(sum(col("w")).as("odeg"))
+        else sym.groupBy(col("src")).agg(count(lit(1)).as("odeg")))
+        .select(col("src").as("v"), col("odeg"))
+      // PERSONALIZED variant (seeds = Some(one-column seed-vertex DF)):
+      // the restart mass concentrates on the seed set — x ← 0.15·e_S +
+      // 0.85·AᵀD⁻¹x from x₀ = e_S — so rank flows outward from the
+      // seeds (similarity/recommendation PageRank). The restart vector
+      // rides in the degree frame (seed flag via a broadcast left join)
+      // and is joined each round in place of the uniform 0.15; with
+      // seeds = None the arithmetic below reduces exactly to the
+      // standard 0.15 + 0.85·sc.
+      //
+      // CONSTANT frame relation for the per-round left join (r14, guide
+      // §2.4/§5): the vertex set is round-invariant (= outDeg's keys),
+      // so framing `contrib` against this (v, odeg[, r0]) checkpoint
+      // instead of the previous round's state leaves the state
+      // single-referenced per round, and the lineage between the
+      // every-3rd-round checkpoints stays a LINEAR chain instead of
+      // doubling per round. The frame also carries odeg into every
+      // round's state (v, odeg, pr), so no round joins a degree table.
+      val frame = lp.latch("deg", seeds.fold(outDeg) { sd =>
+          outDeg.join(broadcast(sd.toDF("sv")), col("v") === col("sv"), "left")
+            .select(col("v"), col("odeg"), when(col("sv").isNotNull, lit(1.0))
+              .otherwise(lit(0.0)).as("r0"))
+        }.repartition(parts, col("v")).localCheckpoint())
+      var pr = frame.select(col("v"), col("odeg"),
+        (if (seeds.isDefined) col("r0") else lit(1.0)).as("pr"))
+      // join strategy for the per-round share join, by MEASURED vertex
+      // count as in connectedComponents: broadcast the rank vector
+      // while it fits AND the edge side spans enough partitions for the
+      // broadcast to save real exchange work (under a handful of
+      // partitions the per-round broadcast build job costs more than
+      // the join it replaces) — round 1 broadcast(pr) unconditionally,
+      // an OOM at cluster-scale vertex counts. The width is tested
+      // first: the count only feeds this gate.
+      //
+      // Otherwise both per-round joins are hinted to a local shuffled
+      // hash join, with no exchange and no broadcast: the state, the
+      // frame and each round's sums are all hash-partitioned on the
+      // vertex key into `parts` (the sums by the pinned width), and so
+      // is the edge set when it is the loop's own copy or a caller's
+      // pre-partitioned one. Left unhinted, the planner broadcasts any
+      // side it estimates under autoBroadcastJoinThreshold — and a
+      // side read from a checkpoint carries small estimates — so each
+      // checkpoint paid a broadcast build job. An edge set partitioned
+      // any other way keeps the planner's choice for the share join.
+      val bcastState = parts > 8 && frame.count() <= stateCap(spark)
+      // the edge partitioning the rounds' joins will see: planned
+      // afresh under the loop conf, because a frame already planned
+      // under AQE reports none for a cached relation
+      val coPartitioned = !bcastState && (spark.sessionState
+          .executePlan(sym.queryExecution.logical).executedPlan
+          .outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), n) => a.name == "src" && n == parts
+        case _ => false
+      })
       for (i <- 1 to iters) {
         // lineage truncated every 3rd iteration (a checkpoint per
         // iteration costs more than the ≤3-deep plan it avoids); the
         // checkpoints are the only per-round jobs: each one runs up to
-        // three rounds' stages (broadcast builds pipeline inside it)
+        // three rounds' stages
         //
         // contribution sum as exact DECIMAL(28,12) (Stable.dsum
         // discipline at 12 dp): order-independent across partial/final
@@ -3394,7 +3416,10 @@ object GraphOps {
         // the double rounding.
         val share = if (weighted) pr
           else pr.select(col("v"), (col("pr") / col("odeg")).cast(dec).as("c"))
-        val sent = sym.join(if (bcastState) broadcast(share) else share,
+        val sent = sym.join(
+          if (bcastState) broadcast(share)
+          else if (coPartitioned) share.hint("shuffle_hash")
+          else share,
           col("src") === col("v"))
         // No repartition after the aggregate (r14, guide §2.4): the
         // loop conf pins spark.sql.shuffle.partitions = parts, so the
@@ -3406,7 +3431,9 @@ object GraphOps {
             if (weighted) (col("pr") * col("w") / col("odeg")).cast(dec).as("c")
             else col("c"))
           .groupBy(col("v2")).agg(sum(col("c")).cast("double").as("sc"))
-        val next = frame.join(contrib, col("v") === col("v2"), "left")
+        val next = frame.join(
+          if (bcastState) contrib else contrib.hint("shuffle_hash"),
+          col("v") === col("v2"), "left")
           .select(col("v"), col("odeg"),
             ((if (seeds.isDefined) lit(0.15) * col("r0") else lit(0.15)) +
               lit(0.85) * coalesce(col("sc"), lit(0.0))).as("pr"))

@@ -39,17 +39,20 @@ import org.apache.spark.sql.expressions.Window
   *    (the win_rank_topn_pergroup shape), with citation count, rank
   *    value and which file (base/delta) the serving row came from.
   *
-  * Scale shape, stage by stage: parse is scan → project (codegen'd
-  * string build + per-row from_xml, no shuffle); the citation
-  * aggregate is one map-side-combined shuffle on the order key; the
-  * merge is one shuffle on the patent key (at 100 TB both sides would
-  * be bucketed on it — sources/Bucketed.scala — making it
-  * exchange-free); PageRank shuffles vertex state only: each round
-  * casts every vertex's rank share once and joins it to a cached
-  * src-partitioned edge relation (see pageRank's comments);
-  * the serve window is one shuffle on the 5-value class key after
-  * rank — every stage's exchange carries keys and fixed-width state,
-  * never text or XML.
+  * Scale shape, stage by stage: orders and the lineitem (pid, cited)
+  * pairs are each exchanged once, hash-partitioned on the patent key
+  * into [[GraphOps.graphParts]] partitions; the citation aggregate,
+  * the co-partitioned join, the markup and the per-row from_xml parse
+  * then run in ONE stage of that many tasks, with no broadcast (see
+  * records; one partition keeps the broadcast plan). The merge is one
+  * shuffle on the parsed patent key (at 100 TB the inputs would be
+  * bucketed on it — sources/Bucketed.scala — making the input
+  * exchanges go away). PageRank latches its own src-partitioned edge
+  * copy and the degree frame once, then shuffles vertex state only:
+  * each round casts every vertex's rank share once and joins it to
+  * the edges locally (see pageRank's comments). The serve window is
+  * one shuffle on the 5-value class key after rank. No exchange ever
+  * carries the markup.
   */
 object PatentPipeline {
 
@@ -85,24 +88,39 @@ object PatentPipeline {
 
   /** one pre-markup record per order: id, class, grant date, sorted
     * distinct citation list (empty array when the order has no
-    * lineitems — a patent citing nothing parses to zero edges) */
-  private def records(s: SparkSession, d: String): DataFrame = {
+    * lineitems — a patent citing nothing parses to zero edges).
+    *
+    * Both inputs are hash-partitioned on pid into `parts` partitions
+    * and joined as a co-partitioned shuffled hash join, so the
+    * citation aggregate, the join and everything the snapshot layers
+    * on top (markup, from_xml) run in one stage of `parts` tasks. Left
+    * to the planner, the join broadcast the aggregate into the orders
+    * scan: one task for the whole parse (sf0.01 orders is one parquet
+    * split) plus a broadcast-build job. With one partition the
+    * planner's plan stays: co-partitioning would parallelize nothing,
+    * and a single-partition parse would satisfy the merge window's
+    * clustering, dropping its exchange and the partial limit-1 bound
+    * below it. */
+  private def records(s: SparkSession, d: String, parts: Int): DataFrame = {
+    val coPart = parts > 1
+    def byPid(df: DataFrame) =
+      if (coPart) df.repartition(parts, col("pid")) else df
     // ONE exchange for the citation list (r14, guide §2.3/§2.4): the
     // old distinct() + collect_list paid two shuffles of the same
     // (pid, cited) pairs — collect_set dedups inside the aggregation
     // buffer (bounded: distinct suppliers per order ≤ lineitems per
     // order), and sort_array makes the set order-canonical exactly as
-    // before. Same rows out, one exchange instead of two.
-    val agg = Tables.lineitem(s, d)
+    // before. Co-partitioned, that exchange is the pid repartition.
+    val agg = byPid(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("pid"),
-        (col("l_suppkey") + GraphOps.SupplierVertexOffset).as("cited"))
+        (col("l_suppkey") + GraphOps.SupplierVertexOffset).as("cited")))
       .groupBy(col("pid"))
       .agg(sort_array(collect_set(col("cited"))).as("cs"))
-    Tables.orders(s, d)
+    byPid(Tables.orders(s, d)
       .select(col("o_orderkey").as("pid"), col("o_orderpriority").as("cl"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("d"),
-        col("o_orderdate").as("od"))
-      .join(agg, Seq("pid"), "left")
+        col("o_orderdate").as("od")))
+      .join(if (coPart) agg.hint("shuffle_hash") else agg, Seq("pid"), "left")
       .withColumn("cs",
         coalesce(col("cs"), expr("CAST(array() AS ARRAY<BIGINT>)")))
   }
@@ -115,61 +133,65 @@ object PatentPipeline {
   private val mergedMemo = SessionMemo[DataFrame]("patentMerged")
 
   private def mergedSnapshot(s: SparkSession, d: String): DataFrame =
-    mergedMemo(s, d) {
-      val rec = records(s, d)
-      val cut = lit(RefreshCutoff).cast("timestamp")
-      // ONE pass over the records (r14, guide §1.2 "don't compute
-      // things you throw away"): the old three-branch union referenced
-      // `rec` three times, so every action re-ran the lineitem⋈orders
-      // scan + citation aggregate once PER BRANCH. Each record instead
-      // explodes pipeline-side into its file variants — base rows
-      // before the cutoff (plus the corrected re-issue delta for
-      // pid ≡ 0 mod ReissueMod), delta rows on/after it — exactly the
-      // same (x, pri, src) rows the union produced, from one scan.
-      // NON-NULL assumption (ADVICE r14 #3): `od` is o_orderdate,
-      // NOT NULL by the TPC-H schema. A null od would fall into the
-      // otherwise() branch (delta) where the old three-filter union
-      // dropped it everywhere — if this pipeline is ever pointed at a
-      // source with nullable dates, guard the otherwise branch with
-      // an explicit od >= cut.
-      val variants = rec.select(col("pid"), col("cl"), col("d"),
-        explode(when(col("od") < cut,
-          when(col("pid") % ReissueMod === 0,
-            array(
-              struct(col("cs").as("vcs"), lit(0).as("pri"),
-                lit("base").as("src")),
-              struct(expr("filter(cs, c -> c % 2 = 0)").as("vcs"),
-                lit(1).as("pri"), lit("delta").as("src"))))
-          .otherwise(array(
+    mergedMemo(s, d)(snapshot(s, d, GraphOps.graphParts(s, d)).cache())
+
+  /** the merged snapshot's plan, parsed from records hash-partitioned
+    * into `parts` partitions (see [[records]]) */
+  private[graft] def snapshot(s: SparkSession, d: String,
+      parts: Int): DataFrame = {
+    val rec = records(s, d, parts)
+    val cut = lit(RefreshCutoff).cast("timestamp")
+    // ONE pass over the records (r14, guide §1.2 "don't compute
+    // things you throw away"): the old three-branch union referenced
+    // `rec` three times, so every action re-ran the lineitem⋈orders
+    // scan + citation aggregate once PER BRANCH. Each record instead
+    // explodes pipeline-side into its file variants — base rows
+    // before the cutoff (plus the corrected re-issue delta for
+    // pid ≡ 0 mod ReissueMod), delta rows on/after it — exactly the
+    // same (x, pri, src) rows the union produced, from one scan.
+    // NON-NULL assumption (ADVICE r14 #3): `od` is o_orderdate,
+    // NOT NULL by the TPC-H schema. A null od would fall into the
+    // otherwise() branch (delta) where the old three-filter union
+    // dropped it everywhere — if this pipeline is ever pointed at a
+    // source with nullable dates, guard the otherwise branch with
+    // an explicit od >= cut.
+    val variants = rec.select(col("pid"), col("cl"), col("d"),
+      explode(when(col("od") < cut,
+        when(col("pid") % ReissueMod === 0,
+          array(
             struct(col("cs").as("vcs"), lit(0).as("pri"),
-              lit("base").as("src")))))
+              lit("base").as("src")),
+            struct(expr("filter(cs, c -> c % 2 = 0)").as("vcs"),
+              lit(1).as("pri"), lit("delta").as("src"))))
         .otherwise(array(
-          struct(col("cs").as("vcs"), lit(1).as("pri"),
-            lit("delta").as("src"))))).as("f"))
-      val files = variants
-        .select(col("pid"), col("cl"), col("d"), col("f.vcs").as("cs"),
-          col("f.pri").as("pri"), col("f.src").as("src"))
-        .select(xmlCol.as("x"), col("pri"), col("src"))
-      // PARSE back out of the markup — the typed record (attribute id
-      // via the `_` convention, repeated <c> as ARRAY<BIGINT>); a
-      // no-citation record parses its c array to NULL → empty
-      val parsed = files
-        .select(expr(
-          "from_xml(x, '_id BIGINT, cl STRING, d STRING, c ARRAY<BIGINT>')")
-          .as("px"), col("pri"), col("src"))
-        .select(col("px._id").as("pid"), col("px.cl").as("cl"),
-          coalesce(col("px.c"), expr("CAST(array() AS ARRAY<BIGINT>)"))
-            .as("cs"),
-          col("pri"), col("src"))
-      // WEEKLY MERGE, latest-wins by file priority: ≤2 rows per pid
-      // (one base, at most one delta), pri is a total order per key
-      val wm = Window.partitionBy(col("pid")).orderBy(desc("pri"))
-      parsed.withColumn("rn", row_number().over(wm))
-        .filter(col("rn") === 1)
-        .select(col("pid"), col("cl"), col("cs"),
-          size(col("cs")).cast("long").as("n_cited"), col("src"))
-        .cache()
-    }
+          struct(col("cs").as("vcs"), lit(0).as("pri"),
+            lit("base").as("src")))))
+      .otherwise(array(
+        struct(col("cs").as("vcs"), lit(1).as("pri"),
+          lit("delta").as("src"))))).as("f"))
+    val files = variants
+      .select(col("pid"), col("cl"), col("d"), col("f.vcs").as("cs"),
+        col("f.pri").as("pri"), col("f.src").as("src"))
+      .select(xmlCol.as("x"), col("pri"), col("src"))
+    // PARSE back out of the markup — the typed record (attribute id
+    // via the `_` convention, repeated <c> as ARRAY<BIGINT>); a
+    // no-citation record parses its c array to NULL → empty
+    val parsed = files
+      .select(expr(
+        "from_xml(x, '_id BIGINT, cl STRING, d STRING, c ARRAY<BIGINT>')")
+        .as("px"), col("pri"), col("src"))
+      .select(col("px._id").as("pid"), col("px.cl").as("cl"),
+        coalesce(col("px.c"), expr("CAST(array() AS ARRAY<BIGINT>)"))
+          .as("cs"),
+        col("pri"), col("src"))
+    // WEEKLY MERGE, latest-wins by file priority: ≤2 rows per pid
+    // (one base, at most one delta), pri is a total order per key
+    val wm = Window.partitionBy(col("pid")).orderBy(desc("pri"))
+    parsed.withColumn("rn", row_number().over(wm))
+      .filter(col("rn") === 1)
+      .select(col("pid"), col("cl"), col("cs"),
+        size(col("cs")).cast("long").as("n_cited"), col("src"))
+  }
 
   val queries: Map[String, QFn] = Map(
     "pipeline_patent_refresh" -> ((s, d) => {

@@ -168,6 +168,49 @@ class GraphSpec extends SparkTestBase {
     } finally sym.unpersist()
   }
 
+  test("pageRank rounds join the co-partitioned rank share locally: " +
+      "no broadcast, no exchange of the edge side") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val g = edgeDf((2L to 6L).map(1L -> _) ++
+      Seq(6L -> 7L, 7L -> 8L, 6L -> 8L, 8L -> 9L, 9L -> 10L): _*)
+    spark.listenerManager.register(listener)
+    try {
+      assert(GraphOps.pageRank(g, 4, numParts = 4).count() == 10)
+      // listener events arrive in order: once the count's is in, every
+      // checkpoint's is too
+      eventually(timeout(30.seconds)) {
+        assert(seen.asScala.exists(_._1 == "count"))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    // the share join: the edges (src) against the rank share (v)
+    def shareJoins(plan: SparkPlan) = plan.collect {
+      case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "src")) => j
+    }
+    val rounds = seen.asScala.toSeq.collect {
+      case ("localCheckpoint", qe) if shareJoins(qe.executedPlan).nonEmpty =>
+        qe.executedPlan
+    }
+    assert(rounds.size == 2, s"expected the round-3 and round-4 checkpoints, " +
+      s"got ${rounds.size}")
+    for (plan <- rounds) {
+      assert(plan.find(_.isInstanceOf[BroadcastExchangeExec]).isEmpty,
+        s"a round broadcasts:\n$plan")
+      shareJoins(plan).foreach(j => assert(j.left.find(_.isInstanceOf[Exchange]).isEmpty,
+        s"the edge side is exchanged:\n$plan"))
+    }
+  }
+
   test("kCore: planted clique survives the peel, pendant chain does not") {
     // triangle {1,2,3} with pendant chain 3-4-5: the 2-core is exactly
     // the triangle (each vertex in-core degree 2); chain peels away

@@ -980,6 +980,52 @@ class PlanAuditSpec extends SparkTestBase {
     }
   }
 
+  test("pipeline_patent_refresh parse: one stage over pid-hashed orders " +
+      "and citations, no broadcast") {
+    // the citation aggregate, its join with orders, the markup and
+    // from_xml run in ONE stage of `parts` tasks: both inputs arrive
+    // through hashpartitioning(pid, parts) exchanges and are joined
+    // co-partitioned, so no broadcast of the aggregate pins the parse
+    // to the orders scan's single split
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      Exchange, ShuffleExchangeExec}
+    val plan = operators.PatentPipeline.snapshot(spark, sf001, parts = 4)
+      .queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val parse = plan.find(_.expressions.exists(
+      _.exists(_.getClass.getSimpleName == "XmlToStructs")))
+    assert(parse.isDefined, s"no from_xml in the snapshot plan:\n$plan")
+    assert(parse.get.find(_.isInstanceOf[BroadcastExchangeExec]).isEmpty,
+      s"a broadcast feeds the parse:\n$plan")
+    // the exchanges the parse's stage reads
+    def stageInputs(p: SparkPlan): Seq[SparkPlan] = p match {
+      case e: Exchange => Seq(e)
+      case _ => p.children.flatMap(stageInputs)
+    }
+    def scans(p: SparkPlan, table: String) = p.collectLeaves().exists {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.getName == s"$table.parquet")
+      case _ => false
+    }
+    val inputs = parse.get.children.flatMap(stageInputs)
+    inputs.foreach { e =>
+      assert(e match {
+        case ShuffleExchangeExec(HashPartitioning(Seq(a: Attribute), 4), _, _, _) =>
+          a.name == "pid"
+        case _ => false
+      }, s"the parse stage reads an exchange other than hash(pid, 4): $e")
+    }
+    for (t <- Seq("orders", "lineitem"))
+      assert(inputs.exists(scans(_, t)),
+        s"no hash(pid, 4) exchange of $t below the parse:\n$plan")
+  }
+
   test("rank-limit pushdown: the serve shapes bound window state to " +
       "top-N BEFORE the shuffle (VERDICT r13 #3)") {
     // a `row_number() <= N` filter over a partitioned window must plan
