@@ -3,9 +3,8 @@ package graft.operators
 import graft._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.storage.StorageLevel
 
 /** §2.10 — graph operators over the citation-graph stand-in.
   *
@@ -3309,7 +3308,13 @@ object GraphOps {
     * 0.85·Σ pr_in/outdeg) on the symmetrized graph — symmetrization
     * removes dangling vertices by construction, so total mass is
     * conserved and scores are comparable to GraphX staticPageRank
-    * (property-tested in GraphSpec). Public library API. */
+    * (property-tested in GraphSpec). Public library API.
+    *
+    * A pre-symmetrized input (`symmetrized = true`) should come
+    * hash-partitioned on src into `numParts` partitions: the rounds
+    * then join it to the rank state without moving it. Any other
+    * partitioning gives the same ranks at the cost of one exchange of
+    * the edges per round. */
   def pageRank(edgeDf: DataFrame, iters: Int,
       symmetrized: Boolean = false, numParts: Int = 0,
       seeds: Option[DataFrame] = None,
@@ -3333,9 +3338,15 @@ object GraphOps {
       // edge set (hash-partitioned on src, it never moves again) and
       // the degree frame read from it without an exchange. Each is
       // one job, and every round's plan scans these leaves instead of
-      // re-planning the caller's whole edge lineage.
+      // re-planning the caller's whole edge lineage. The edge copy is
+      // stored serialized: a checkpoint's default level keeps one Java
+      // object per row. sf0.1's 1.19M-edge copy holds 100 MB that
+      // way and 50 MB serialized; the deserialized copy filled the 2 GB
+      // heap of the patent-refresh benchmark and doubled its GC time,
+      // for 6–11 % less pass time (sf0.01, sf0.1; 4 cores).
       val sym = if (symmetrized) edgeDf
-        else lp.latch("sym", symmetrize(edgeDf, parts).localCheckpoint())
+        else lp.latch("sym", symmetrize(edgeDf, parts)
+          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER))
       // odeg = out-degree (uniform) or Σ outgoing weight (weighted) —
       // the contribution divisor either way
       val outDeg = (if (weighted)
@@ -3379,22 +3390,15 @@ object GraphOps {
       // hash join, with no exchange and no broadcast: the state, the
       // frame and each round's sums are all hash-partitioned on the
       // vertex key into `parts` (the sums by the pinned width), and so
-      // is the edge set when it is the loop's own copy or a caller's
-      // pre-partitioned one. Left unhinted, the planner broadcasts any
-      // side it estimates under autoBroadcastJoinThreshold — and a
+      // is the edge set when it is the loop's own copy. A caller's
+      // pre-symmetrized edge set should come hash-partitioned on src
+      // into `numParts` (as the graph_pagerank* keys' symEdges and
+      // wSymEdges do); any other partitioning costs one exchange of
+      // the edge side per round. Left unhinted, the planner broadcasts
+      // any side it estimates under autoBroadcastJoinThreshold — and a
       // side read from a checkpoint carries small estimates — so each
-      // checkpoint paid a broadcast build job. An edge set partitioned
-      // any other way keeps the planner's choice for the share join.
+      // checkpoint paid a broadcast build job.
       val bcastState = parts > 8 && frame.count() <= stateCap(spark)
-      // the edge partitioning the rounds' joins will see: planned
-      // afresh under the loop conf, because a frame already planned
-      // under AQE reports none for a cached relation
-      val coPartitioned = !bcastState && (spark.sessionState
-          .executePlan(sym.queryExecution.logical).executedPlan
-          .outputPartitioning match {
-        case HashPartitioning(Seq(a: Attribute), n) => a.name == "src" && n == parts
-        case _ => false
-      })
       for (i <- 1 to iters) {
         // lineage truncated every 3rd iteration (a checkpoint per
         // iteration costs more than the ≤3-deep plan it avoids); the
@@ -3417,9 +3421,7 @@ object GraphOps {
         val share = if (weighted) pr
           else pr.select(col("v"), (col("pr") / col("odeg")).cast(dec).as("c"))
         val sent = sym.join(
-          if (bcastState) broadcast(share)
-          else if (coPartitioned) share.hint("shuffle_hash")
-          else share,
+          if (bcastState) broadcast(share) else share.hint("shuffle_hash"),
           col("src") === col("v"))
         // No repartition after the aggregate (r14, guide §2.4): the
         // loop conf pins spark.sql.shuffle.partitions = parts, so the
