@@ -251,7 +251,7 @@ object DedupOps {
       // one row per corpus vector — the standard "signature table"
       // step of any LSH pipeline, bounded at any scale. Materialized
       // before the banded self-join: both join sides would otherwise
-      // re-evaluate the 32 interpreted sign-bit folds per row.
+      // re-run the quantize and the 32 plane dots per row.
       // Plan-only paths stay lazy (the GraphOps audit discipline).
       val sigRaw = VectorOps
         .signedProjected(s, d, VectorOps.clusterPlanes, "sig")
@@ -744,13 +744,15 @@ object DedupOps {
     // fuzzy string dedup by edit distance, blocked by string length
     // (|len(a)-len(b)| <= k is a necessary condition for
     // levenshtein <= k, so the join carries a length-band predicate
-    // that prunes most pairs before the O(len²) DP runs)
+    // that prunes most pairs before the O(len²) DP runs). The probe
+    // side is broadcast and the streamed side spread across the cores.
     "dedup_edit_distance" -> ((s, d) => {
       val p = Tables.part(s, d).filter(col("p_partkey") < 500L)
         .select(col("p_partkey"), col("p_name"), length(col("p_name")).as("len"))
       val a = p.select(col("p_partkey").as("a"), col("p_name").as("na"), col("len").as("la"))
       val b = p.select(col("p_partkey").as("b"), col("p_name").as("nb"), col("len").as("lb"))
-      a.join(b, col("a") < col("b") && abs(col("la") - col("lb")) <= 3)
+      VectorOps.spread(a)
+        .join(broadcast(b), col("a") < col("b") && abs(col("la") - col("lb")) <= 3)
         .select(col("a"), col("b"), levenshtein(col("na"), col("nb")).as("dist"))
         .filter(col("dist") <= 3)
         .orderBy(col("a"), col("b"))
@@ -771,7 +773,8 @@ object DedupOps {
         .select(col("p_partkey"), col("p_name"), length(col("p_name")).as("len"))
       val a = p.select(col("p_partkey").as("a"), col("p_name").as("na"), col("len").as("la"))
       val b = p.select(col("p_partkey").as("b"), col("p_name").as("nb"), col("len").as("lb"))
-      a.join(b, col("a") < col("b") && abs(col("la") - col("lb")) <= 3)
+      VectorOps.spread(a)
+        .join(broadcast(b), col("a") < col("b") && abs(col("la") - col("lb")) <= 3)
         .select(col("a"), col("b"),
           round(expr("jaro_winkler(na, nb)"), 4).as("jw"))
         .filter(col("jw") >= 0.88)

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft._
 import graft.Stable._
-import graft.functions.CosineSimilarity
+import graft.functions.{CosineSimilarity, InnerProduct, PlaneDots}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -41,9 +41,9 @@ object VectorOps {
   private[graft] def rpSign(j: Int, d: Int): Int =
     if ((((j * RpDims + d) * 2654435761L >> 16) & 1L) == 1L) 1 else -1
 
-  /** the j-th sign row as a Spark array literal */
-  private def rpSignArr(j: Int): String =
-    (0 until RpDims).map(d => rpSign(j, d)).mkString("array(", ", ", ")")
+  /** the sign matrix as [[RpK]] plane rows */
+  private lazy val rpPlanes: Array[Array[Int]] =
+    Array.tabulate(RpK, RpDims)(rpSign)
 
   /** the full matrix as DuckDB VALUES rows (j, d, sg) */
   private def rpSignValues: String =
@@ -58,27 +58,24 @@ object VectorOps {
     // says whether the cheap sketch space is safe for the ANN
     // shortlists (ratios hugging 1 = yes). EXACT until the last step:
     // components quantize on the 1e-8 basis, each of the 16
-    // projections is an integer zip_with·aggregate fold (|p| ≤ 64·2e8
-    // — int64-safe), squares accumulate in DECIMAL(38,0)/HUGEINT, and
+    // projections is an exact integer plane dot (|p| ≤ 64·2e8 —
+    // int64-safe), squares accumulate in DECIMAL(38,0)/HUGEINT, and
     // ONE IEEE division per vector closes before the 4dp quantize.
     // Shape: entirely pipeline-side per row (no explode, no sign-table
-    // join — the matrix is 16 array literals in codegen); the only
-    // shuffle is the final one-row audit agg.
+    // join — the 16 projections are one codegen'd PlaneDots call over
+    // the constant matrix); the only shuffle is the final one-row
+    // audit agg.
     "vec_rp_project_audit" -> ((s, d) => {
       val qarr = "transform(embedding, x -> CAST(CAST(CAST(x AS DOUBLE)" +
         " AS DECIMAL(20,8)) * 100000000 AS BIGINT))"
-      val pjCols = (0 until RpK).map { j =>
-        expr(s"aggregate(zip_with(qarr, ${rpSignArr(j)}, " +
-          "(x, sg) -> x * CAST(sg AS BIGINT)), CAST(0 AS BIGINT), " +
-          "(a, b) -> a + b)").as(s"p$j")
-      }
       val p2sum = (0 until RpK)
-        .map(j => s"CAST(p$j AS DECIMAL(38,0)) * p$j").mkString(" + ")
+        .map(j => s"CAST(pj[$j] AS DECIMAL(38,0)) * pj[$j]").mkString(" + ")
       val n2 = "aggregate(qarr, CAST(0 AS DECIMAL(38,0)), " +
         "(a, x) -> a + CAST(x AS DECIMAL(38,0)) * x)"
       Tables.embeddings(s, d)
-        .select((col("vec_id") +: expr(qarr).as("qarr") +: Seq.empty): _*)
-        .select((col("vec_id") +: expr(n2).as("n2") +: pjCols): _*)
+        .select(col("vec_id"), expr(qarr).as("qarr"))
+        .select(col("vec_id"), expr(n2).as("n2"),
+          PlaneDots(col("qarr"), rpPlanes).as("pj"))
         .filter(col("n2") > 0)
         .select(col("vec_id"),
           r4(expr(p2sum).cast(DoubleType) / RpK.toDouble /
@@ -231,14 +228,14 @@ object VectorOps {
     }),
 
     // top-5 cosine neighbors for the 10 lowest vec_ids (brute force,
-    // probes broadcast — corpus scanned once)
+    // probes broadcast — corpus scanned once, spread across the cores)
     "vec_cosine_topk" -> ((s, d) => {
       CosineSimilarity.register(s)
       val e = Tables.embeddings(s, d)
       val probes = e.orderBy(col("vec_id")).limit(10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
       val w = Window.partitionBy(col("probe_id")).orderBy(desc("cos"), asc("vec_id"))
-      e.crossJoin(broadcast(probes))
+      spread(e).crossJoin(broadcast(probes))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id"),
           round(cosine("pe", "embedding"), 4).as("cos"))
@@ -283,22 +280,19 @@ object VectorOps {
     // UNnormalized embeddings (recommender / reranker dot-product
     // models), where cosine's norm division is wrong by design. Same
     // broadcast-probe brute-force shape as vec_cosine_topk; the dot
-    // product is a left-to-right double fold (`aggregate(zip_with)`),
-    // the same evaluation order as DuckDB's list_inner_product, so
-    // scores agree to the ulp and rank on the rounded value.
+    // product is the native `inner_product`, a left-to-right double
+    // fold — the same evaluation order as DuckDB's list_inner_product,
+    // so scores agree to the ulp and rank on the rounded value.
     "vec_mips_topk" -> ((s, d) => {
+      InnerProduct.register(s)
       val e = Tables.embeddings(s, d)
       val probes = e.orderBy(col("vec_id")).limit(10)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
       val w = Window.partitionBy(col("probe_id")).orderBy(desc("dot"), asc("vec_id"))
-      e.crossJoin(broadcast(probes))
+      spread(e).crossJoin(broadcast(probes))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id"),
-          round(expr(
-            """aggregate(zip_with(pe, embedding,
-              |  (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-              |  CAST(0.0 AS DOUBLE), (a, v) -> a + v)""".stripMargin), 4)
-            .as("dot"))
+          round(expr("inner_product(pe, embedding)"), 4).as("dot"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
         .orderBy(col("probe_id"), col("rank"))
@@ -315,6 +309,7 @@ object VectorOps {
     // once. Probe-bounded cost.
     "vec_metric_rank_agreement" -> ((s, d) => {
       CosineSimilarity.register(s)
+      InnerProduct.register(s)
       val e = Tables.embeddings(s, d)
       val probes = e.filter(col("vec_id") < 100)
         .select(col("vec_id").as("p"), col("embedding").as("pe"))
@@ -322,11 +317,7 @@ object VectorOps {
         .filter(col("vec_id") =!= col("p"))
         .select(col("p"), col("vec_id").as("b"),
           round(cosine("pe", "embedding"), 4).as("cos"),
-          round(expr(
-            """aggregate(zip_with(pe, embedding,
-              |  (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-              |  CAST(0.0 AS DOUBLE), (a, v) -> a + v)""".stripMargin), 4)
-            .as("dot"))
+          round(expr("inner_product(pe, embedding)"), 4).as("dot"))
       val wc = Window.partitionBy(col("p")).orderBy(desc("cos"), asc("b"))
       val wd = Window.partitionBy(col("p")).orderBy(desc("dot"), asc("b"))
       val ranked = scored
@@ -1194,44 +1185,32 @@ object VectorOps {
   lazy val servingPlanes: Array[Array[Int]] =
     planesFor(9000, ServingTables * ServingBandBits)
 
-  /** embeddings with the k-bit signed-random-projection signature of
-    * plane family `ps` in column `colName`. Each signature bit is the
-    * sign of an exact INTEGER dot product (components quantized
-    * through the engine-identical DECIMAL(20,8) → 1e-8-unit BIGINT
-    * cast), so the fold is order-independent and DuckDB recomputes
-    * the identical signature per vector ([[signatureCtesSql]] is the
-    * oracle-side twin). No cache: the sign bits are codegen'd
-    * higher-order exprs, cheaper to recompute on each side of a
-    * self-join than to pin the bucketed corpus in storage memory for
-    * the session (the round-1 per-call cache was never unpersisted). */
+  /** `df` round-robin repartitioned to one partition per core. Each
+    * sf-scale table is a single parquet split, so a kernel that reads
+    * one directly runs as a single task. */
+  private[operators] def spread(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
   /** embeddings with the exact integer plane dot products of family
     * `ps` as an array<bigint> column — the shared basis of both the
     * signature sign bits ([[signedProjected]]) and the multi-probe
     * bit-flip margins (vec_ann_lsh_multiprobe: |dot| IS the distance
     * to the plane, so the lowest-|dot| bits are the ones most likely
-    * flipped on a true neighbor). Quantization runs ONCE per row: the
-    * DECIMAL(20,8) cast chain is the expensive half (higher-order
-    * exprs evaluate interpreted), and the naive form re-ran it inside
-    * every one of the k folds — 64·k casts per row where 64 suffice
-    * (measured r8: 14.2 → ~4 s on dedup_embedding_cluster's 32-bit
-    * signature). */
+    * flipped on a true neighbor). Quantization runs ONCE per row (the
+    * DECIMAL(20,8) cast chain, a higher-order `transform` that
+    * evaluates interpreted), and all k dots are one codegen'd
+    * [[PlaneDots]] call over it. The corpus is spread across the
+    * cores first. */
   private[operators] def planeDotted(
       s: SparkSession, d: String, ps: Array[Array[Int]],
-      colName: String): DataFrame = {
-    val dots = ps.indices.map { i =>
-      expr(s"""aggregate(
-        |  zip_with(_q, ${ps(i).mkString("array(", ", ", ")")},
-        |    (x, y) -> x * y),
-        |  CAST(0 AS BIGINT), (a, v) -> a + v)""".stripMargin)
-    }
-    Tables.embeddings(s, d)
+      colName: String): DataFrame =
+    spread(Tables.embeddings(s, d))
       .withColumn("_q", expr(
         """transform(embedding, x ->
           |  CAST(CAST(CAST(x AS DOUBLE) AS DECIMAL(20,8))
           |       * 100000000 AS BIGINT))""".stripMargin))
-      .withColumn(colName, array(dots: _*))
+      .withColumn(colName, PlaneDots(col("_q"), ps))
       .drop("_q")
-  }
 
   /** the k-bit signature from [[planeDotted]]'s sign bits */
   private[operators] def bucketOfDots(
@@ -1241,6 +1220,16 @@ object VectorOps {
         .otherwise(lit(0L))
     }.reduce(_ + _)
 
+  /** embeddings with the k-bit signed-random-projection signature of
+    * plane family `ps` in column `colName`. Each signature bit is the
+    * sign of an exact INTEGER dot product (components quantized
+    * through the engine-identical DECIMAL(20,8) → 1e-8-unit BIGINT
+    * cast), so the fold is order-independent and DuckDB recomputes
+    * the identical signature per vector ([[signatureCtesSql]] is the
+    * oracle-side twin). No cache: the signature is one codegen'd
+    * kernel call per row, cheaper to recompute on each side of a
+    * self-join than to pin the bucketed corpus in storage memory for
+    * the session (the round-1 per-call cache was never unpersisted). */
   private[operators] def signedProjected(
       s: SparkSession, d: String, ps: Array[Array[Int]],
       colName: String): DataFrame =
@@ -1293,8 +1282,9 @@ object VectorOps {
 
   /** Why mapPartitions (policy exception (d), like the multimodal
     * decoders): the Gram is a per-partition ACCUMULATION — O(d²)
-    * state updated by every row, shuffling only d²·partitions partial
-    * rows (MLlib's computeGramianMatrix shape). The declarative
+    * state updated by every row, shuffling only d²/2 partial rows per
+    * partition, and the corpus is spread to one partition per core
+    * (MLlib's computeGramianMatrix shape). The declarative
     * alternatives both lose: a nested higher-order `transform` emits
     * the d²/2 products per row through an INTERPRETED lambda (HOFs
     * have no doGenCode — measured 3.6 s at sf0.1 against 0.3 s for
@@ -1304,13 +1294,16 @@ object VectorOps {
     * [[GramFlushRows]] rows (a Long would wrap past ~3.8e3 rows of
     * max-magnitude products), and each partial ships as exact
     * (quot, rem) 1e18-limb longs rebuilt into DECIMAL(38,0) — no
-    * precision cliff at any corpus size. */
+    * precision cliff at any corpus size. The lower triangle mirrors
+    * the summed upper one in the same projection, so the partials
+    * are computed once. Plan-only sessions cache instead of
+    * checkpointing (the [[DedupOps]] embSig discipline). */
   private def gramInt(s: SparkSession, d: String): DataFrame =
     gramMemo(s, d) {
       import s.implicits._
       val limb = java.math.BigInteger.valueOf(1000000000000000000L)
-      val partials = Tables.embeddings(s, d)
-        .select(col("embedding")).as[Seq[Float]]
+      val partials = spread(Tables.embeddings(s, d).select(col("embedding")))
+        .as[Seq[Float]]
         .mapPartitions { rows =>
           var dim = -1
           var q: Array[Long] = null          // quantized row components
@@ -1379,9 +1372,12 @@ object VectorOps {
       val upper = partials.groupBy(col("i"), col("j"))
         .agg(sum(col("quot").cast(dec) * lit(1000000000000000000L).cast(dec)
           + col("rem").cast(dec)).as("gi"))
-      upper.union(upper.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("gi")))
-        .localCheckpoint() // both consumers read the materialized matrix
+      val full = upper
+        .select(explode(array_distinct(array(struct(col("i"), col("j")),
+          struct(col("j").as("i"), col("i").as("j"))))).as("c"), col("gi"))
+        .select(col("c.i").as("i"), col("c.j").as("j"), col("gi"))
+      // both consumers read the materialized matrix
+      if (GraphOps.planOnly(s)) full.cache() else full.localCheckpoint()
     }
 
   /** Long-lane magnitude budget before a BigInt flush (half of

@@ -17,6 +17,9 @@ class PlanAuditSpec extends SparkTestBase {
   override def beforeAll(): Unit = {
     super.beforeAll()
     spark.conf.set(operators.GraphOps.PlanOnlyKey, "true")
+    // memos latched by an earlier suite in this JVM would hide the
+    // plans the memo tests below inspect
+    SessionMemo.clear(spark)
   }
   override def afterAll(): Unit = {
     spark.conf.unset(operators.GraphOps.PlanOnlyKey)
@@ -644,6 +647,68 @@ class PlanAuditSpec extends SparkTestBase {
       s"the 16 projections must fold in codegen, not explode:\n$p")
     assert(!p.toLowerCase.contains("cartesian"),
       s"no sign-table join may appear:\n$p")
+  }
+
+  /** the physical plans of the cached memo frames a query reads (under
+    * planOnly the memos cache instead of checkpointing) */
+  private def cachedPlans(q: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    SparkEntry.queries(q)(spark, sf001).queryExecution.sparkPlan.collect {
+      case m: InMemoryTableScanExec => m.relation.cachedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    }
+  }
+
+  /** whether `p` holds a round-robin exchange to one partition per core */
+  private def spreadBelow(p: org.apache.spark.sql.execution.SparkPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val parts = spark.sparkContext.defaultParallelism
+    p.exists {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning == RoundRobinPartitioning(parts)
+      case _ => false
+    }
+  }
+
+  test("vec_gram_matrix: the Gram partials accumulate in ONE mapPartitions " +
+      "pass under the memo") {
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    val cached = cachedPlans("vec_gram_matrix")
+    assert(cached.size == 1, s"expected the one cached Gram memo: $cached")
+    val mp = cached.head.collect { case m: MapPartitionsExec => m }
+    assert(mp.size == 1,
+      s"the mirrored cells must reuse the one partials pass:\n${cached.head}")
+    assert(spreadBelow(mp.head),
+      s"the partials must read the corpus spread across the cores:\n${cached.head}")
+  }
+
+  test("similarity kernels run on every core: dedup joins stream a " +
+      "round-robin side, embSig projects above a round-robin exchange") {
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    for (q <- Seq("dedup_jaro_winkler", "dedup_edit_distance")) {
+      val sp = SparkEntry.queries(q)(spark, sf001).queryExecution.sparkPlan
+      assert(sp.collect { case c: CartesianProductExec => c }.isEmpty,
+        s"$q: the blocked join must not plan as a cartesian product:\n$sp")
+      val joins = sp.collect { case j: BroadcastNestedLoopJoinExec => j }
+      assert(joins.size == 1, s"$q: expected one broadcast NL join:\n$sp")
+      val j = joins.head
+      val streamed = if (j.buildSide == BuildRight) j.left else j.right
+      assert(spreadBelow(streamed),
+        s"$q: the streamed side must be spread across the cores:\n$sp")
+    }
+    val projections = cachedPlans("dedup_band_plan").flatMap(_.collect {
+      case p: ProjectExec if p.projectList.exists(_.exists(
+        _.isInstanceOf[graft.functions.PlaneDots])) => p
+    })
+    assert(projections.nonEmpty, "embSig must project its plane dots natively")
+    assert(projections.forall(spreadBelow),
+      s"embSig's projection must sit above a round-robin exchange:\n$projections")
   }
 
   test("win_rolling_median: frames stay bounded (no unbounded-frame collect)") {

@@ -55,6 +55,7 @@ class Round15Spec extends SparkTestBase {
         (() => graft.functions.SortedCombinations.register(spark)),
       Seq("jaro_winkler") -> (() => graft.functions.JaroWinkler.register(spark)),
       Seq("cosine_sim") -> (() => graft.functions.CosineSimilarity.register(spark)),
+      Seq("inner_product") -> (() => graft.functions.InnerProduct.register(spark)),
       Seq("morton2") -> (() => graft.functions.MortonInterleave.register(spark)),
       Seq("minhash_sig", "cm_sketch", "hll_reg") ->
         (() => graft.SqlFrontend.registerFunctions(spark)))
