@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
@@ -77,8 +78,10 @@ object Bench {
     // pass — its 16 hyperplane array literals generate a huge method),
     // and WHICH query paid it used to depend on hash-map iteration
     // order, making per-query times incomparable across rounds. The
-    // warmup charges compilation once, off the clock; at cluster scale
-    // that constant vanishes against hours of execution.
+    // warmup charges compilation once, off the clock, only while
+    // Spark's generated-code cache holds every class a pass generates:
+    // GraftExtensions sizes it for that, and "codegen_compiles" below
+    // shows any class a timed pass still compiled.
     val warmDir = "/root/testdata/sf0.001"
     // NonFatal only: an OOM or other fatal error during warmup must
     // abort the bench, not silently degrade into timing a thrashed JVM.
@@ -138,6 +141,12 @@ object Bench {
     // moved) without re-running
     val passTimes = scala.collection.mutable.Map.empty[String,
       scala.collection.mutable.ArrayBuffer[Double]]
+    // generated classes each query compiled in each timed pass: the
+    // delta of Spark's compile counter, 0 while the codegen cache
+    // still holds every class the warm-up generated
+    val compiles = scala.collection.mutable.Map.empty[String,
+      scala.collection.mutable.ArrayBuffer[Long]]
+    val compileCount = CodegenMetrics.METRIC_COMPILATION_TIME
     // memo-warming consumers (ADVICE r5 #5): queries whose timed run
     // BUILT at least one shared session memo — their per-query time
     // carries a family's shared-relation cost and is only comparable
@@ -163,6 +172,7 @@ object Bench {
           drain()
           telemetry.peakMem.set(0L)
           val snap0 = telemetry.snapshot
+          val compiled0 = compileCount.getCount
           val t0 = System.nanoTime()
           try {
             fn(spark, sfDir).count()
@@ -176,6 +186,9 @@ object Bench {
             }
             passTimes.getOrElseUpdate(name,
               scala.collection.mutable.ArrayBuffer.empty) += t
+            compiles.getOrElseUpdate(name,
+              scala.collection.mutable.ArrayBuffer.empty) +=
+              compileCount.getCount - compiled0
             if (SessionMemo.builds.get() > builds0)
               memoWarm += name
           } catch {
@@ -190,6 +203,7 @@ object Bench {
               failedQ += name
               best.remove(name)
               passTimes.remove(name)
+              compiles.remove(name)
               memoWarm -= name
               shuffleOf.remove(name)
               // ADVICE r7 #4: a query that fails AFTER building a
@@ -227,6 +241,13 @@ object Bench {
       case (name, _) if passTimes.contains(name) =>
         "\"" + name + "\":[" +
           passTimes(name).map(fmt3).mkString(",") + "]"
+    }.mkString("{", ",", "}")
+    // "codegen_compiles" = generated classes compiled per timed pass,
+    // one entry per "passes" entry. The stdout contract lines are
+    // UNCHANGED.
+    val compilesJson = sorted.collect {
+      case (name, _) if compiles.contains(name) =>
+        "\"" + name + "\":" + compiles(name).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val warmJson = memoWarm.toSeq.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -267,7 +288,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + fmt3(v) }
       .mkString("{", ",", "}")
     try Files.writeString(Paths.get(benchFile),
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"sf":"$sfDir","passes":$passesJson,"memo_warm":$warmJson,"shuffle":$shuffleJson,"memo_build":$memoBuildJson}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"sf":"$sfDir","passes":$passesJson,"memo_warm":$warmJson,"shuffle":$shuffleJson,"memo_build":$memoBuildJson,"codegen_compiles":$compilesJson}""")
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] $benchFile write failed: $e") }
     // Two lines, long-then-short (round-1 post-mortem): the driver may

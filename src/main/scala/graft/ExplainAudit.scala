@@ -65,6 +65,9 @@ object ExplainAudit {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the native join strategies and hints: without them RangeJoinNode
+      // has no physical plan and the asof plans are not the engine's
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       // plan audit never executes — keep memo construction action-free
       .config(graft.operators.GraphOps.PlanOnlyKey, "true")
