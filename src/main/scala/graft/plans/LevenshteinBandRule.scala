@@ -90,10 +90,10 @@ object GraftExtensions {
   /** Entries in Spark's generated-code cache. Spark's default, 100,
     * holds fewer classes than one pass over the declared keys
     * generates (3,507 distinct classes over all 373 keys at sf0.001 on
-    * 4 cores), so a session re-issuing the same queries recompiled most
-    * of them in every pass, and each recompiled class started again in
-    * the bytecode interpreter. 8,192 keeps a full key pass with
-    * headroom. */
+    * 4 cores), so under it a session re-issuing the same queries
+    * recompiles most of them in every pass, and each recompiled class
+    * starts again in the bytecode interpreter. 8,192 keeps a full key
+    * pass with headroom. */
   val CodegenCacheEntries = 8192
 
   /** Set the generated-code cache size unless the conf already names
