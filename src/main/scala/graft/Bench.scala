@@ -147,6 +147,10 @@ object Bench {
     val compiles = scala.collection.mutable.Map.empty[String,
       scala.collection.mutable.ArrayBuffer[Long]]
     val compileCount = CodegenMetrics.METRIC_COMPILATION_TIME
+    // classes compiled from JVM start through the warm-up: with the
+    // timed passes' compiles, every class the run generated, as long
+    // as the cache evicted none
+    val warmupCompiles = compileCount.getCount
     // memo-warming consumers (ADVICE r5 #5): queries whose timed run
     // BUILT at least one shared session memo — their per-query time
     // carries a family's shared-relation cost and is only comparable
@@ -243,8 +247,9 @@ object Bench {
           passTimes(name).map(fmt3).mkString(",") + "]"
     }.mkString("{", ",", "}")
     // "codegen_compiles" = generated classes compiled per timed pass,
-    // one entry per "passes" entry. The stdout contract lines are
-    // UNCHANGED.
+    // one entry per "passes" entry; "codegen_warmup_compiles" = those
+    // compiled before the first timed pass. The stdout contract lines
+    // are UNCHANGED.
     val compilesJson = sorted.collect {
       case (name, _) if compiles.contains(name) =>
         "\"" + name + "\":" + compiles(name).mkString("[", ",", "]")
@@ -288,7 +293,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + fmt3(v) }
       .mkString("{", ",", "}")
     try Files.writeString(Paths.get(benchFile),
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"sf":"$sfDir","passes":$passesJson,"memo_warm":$warmJson,"shuffle":$shuffleJson,"memo_build":$memoBuildJson,"codegen_compiles":$compilesJson}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"sf":"$sfDir","passes":$passesJson,"memo_warm":$warmJson,"shuffle":$shuffleJson,"memo_build":$memoBuildJson,"codegen_compiles":$compilesJson,"codegen_warmup_compiles":$warmupCompiles}""")
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] $benchFile write failed: $e") }
     // Two lines, long-then-short (round-1 post-mortem): the driver may

@@ -2331,12 +2331,10 @@ object GraphOps {
         // checkpointed copies pay that exchange once per orientation
         // (r14, guide §2.4: two operations keyed the same way share one
         // exchange); each step then shuffles only the vertex state.
-        // Stored serialized, like pageRank's edge copy: the default
-        // level keeps one Java object per row.
-        val eBySrc = lp.latch("bySrc", e.repartition(parts, col("src"))
-          .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER))
-        val eByDst = lp.latch("byDst", e.repartition(parts, col("dst"))
-          .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER))
+        val eBySrc = lp.latch("bySrc",
+          e.repartition(parts, col("src")).localCheckpoint(false))
+        val eByDst = lp.latch("byDst",
+          e.repartition(parts, col("dst")).localCheckpoint(false))
         // one normalized power step: raw[v] = Σ state over the edges
         // incident at `to`, framed to the full vertex set, then
         // L1-normalized back to Σx = 10⁶ in integer space — the total
